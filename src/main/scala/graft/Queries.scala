@@ -72,7 +72,7 @@ object Queries {
     val ord = Seq(col("ts").desc, col("event_id").desc)
     val target = Dedup.keepLast(ev.filter(to_date(col("ts")) <= cutoff), keys, ord)
     val updates = ev.filter(to_date(col("ts")) > cutoff)
-    TableOps.default.merge(target, updates, keys, ord)
+    MergeUpsert.merge(target, updates, keys, ord)
   }
 
   def dqAudit(s: SparkSession, dir: String): DataFrame =

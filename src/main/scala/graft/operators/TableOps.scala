@@ -2,25 +2,22 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
-/** Table-services seam (SURVEY §7.3) — the four mutating table services
-  * the engine emulates over plain parquet, behind ONE small trait so a
-  * transactional table format (Delta/Iceberg/Hudi) can slot in without
-  * touching call sites:
+/** Table-services seam (SURVEY §7.3): the mutating table services a
+  * pipeline needs, behind ONE small trait. The engine's backend is
+  * [[TableOps.commitLog]] — the [[graft.tables.CommitLogTable]]
+  * versioned-manifest format, where every upsert, compaction and vacuum
+  * is an atomic commit and readers resolve an isolated snapshot (the
+  * reference's Delta `MERGE`, `docs/databricks_setup.md:170-198`).
+  * [[DeltaSqlTableOps]] binds the same trait to real delta-spark where
+  * that jar is on the classpath.
   *
   *   - `merge`: MERGE-upsert semantics on frames (latest-wins per key) —
   *     Delta maps it to `DeltaTable.merge`;
-  *   - `upsertPartitions`: apply a batch to a live partitioned table
-  *     (here: partition-pruned stage-then-swap renames; Delta: the same
-  *     merge with partition pruning, plus real reader isolation — the
-  *     documented swap-visibility window this seam exists to close);
+  *   - `upsertPartitions` / `upsert`: apply a batch to a live keyed table,
+  *     partition-pruned when day-partitioned;
   *   - `compact`: OPTIMIZE / bin-packing small-file compaction;
-  *   - `vacuum`: sweep stale artifacts (staging dirs here; aged
-  *     tombstoned files in a real format).
-  *
-  * The default binding is [[ParquetTableOps]]; production code paths
-  * (silver merge, the streaming upsert triggers, the maintenance specs)
-  * go through [[TableOps.default]], so swapping the implementation is a
-  * one-line binding change, not a refactor.
+  *   - `vacuum`: sweep data files no retained version references;
+  *   - `readTable`: the snapshot read of what the other services wrote.
   */
 trait TableOps {
 
@@ -32,7 +29,7 @@ trait TableOps {
 
   /** Apply `batch` to the live day-partitioned table at `targetDir` with
     * partition pruning (only partitions present in the batch are
-    * touched), crash-safe.
+    * touched), as one atomic commit.
     */
   def upsertPartitions(batch: DataFrame, targetDir: String, keys: Seq[String],
       order: Seq[Column], dayCol: String): Unit
@@ -50,31 +47,25 @@ trait TableOps {
   def compact(spark: SparkSession, dir: String, partitionCol: String,
       targetFileBytes: Long, values: Seq[String]): Map[String, (Int, Int)]
 
-  /** VACUUM: restore-first sweep of orphaned maintenance artifacts;
+  /** VACUUM: sweep data files outside the binding's retention window;
     * returns (restored, deleted).
     */
   def vacuum(dir: String): (Int, Int)
 
   /** Read the live table this binding maintains at `dir` — the read half
-    * of [[upsertPartitions]] (plain parquet scan here; a snapshot resolve
-    * in a transactional format, `spark.read.format("delta").load` in
-    * Delta). Pipelines that read their own silver/gold mid-stream go
-    * through this seam so the binding stays swappable end-to-end.
+    * of [[upsertPartitions]] (a snapshot resolve in the commit log,
+    * `spark.read.format("delta").load` in Delta). A bare
+    * `spark.read.parquet(dir)` of a copy-on-write table also sees the
+    * superseded files, so pipelines that read their own silver/gold
+    * mid-stream go through this seam.
     */
   def readTable(spark: SparkSession, dir: String): DataFrame
 }
 
 object TableOps {
-  /** The engine-wide binding — swap here to mount a transactional
-    * format's implementation.
-    */
-  val default: TableOps = ParquetTableOps
-
-  /** The transactional binding: the same four services over the
+  /** The engine's binding: the table services over the
     * [[graft.tables.CommitLogTable]] versioned-manifest format — atomic
     * commits, snapshot-isolated readers, persisted CDF, time travel.
-    * Callers read the table through `CommitLogTable.open(...).read()`
-    * rather than a bare `spark.read.parquet(dir)`.
     */
   val commitLog: TableOps = CommitLogTableOps
 }
@@ -87,9 +78,8 @@ object TableOps {
 object CommitLogTableOps extends TableOps {
   import graft.tables.CommitLogTable
 
-  /** Frame-level MERGE is storage-free — same semantics as the default
-    * binding (the transactional value-add lives in [[upsertPartitions]],
-    * where the result is committed).
+  /** Frame-level MERGE is storage-free (the transactional value-add
+    * lives in [[upsertPartitions]], where the result is committed).
     */
   override def merge(target: DataFrame, updates: DataFrame, keys: Seq[String],
       order: Seq[Column]): DataFrame =
@@ -134,35 +124,4 @@ object CommitLogTableOps extends TableOps {
   /** Snapshot-isolated read of the latest committed version. */
   override def readTable(spark: SparkSession, dir: String): DataFrame =
     CommitLogTable.open(spark, dir).read()
-}
-
-/** The plain-parquet implementation: delegates to the spec-proven
-  * emulations ([[MergeUpsert]], [[graft.streaming.FileStreamIngest]],
-  * [[graft.sinks.Sinks]]).
-  */
-object ParquetTableOps extends TableOps {
-  override def merge(target: DataFrame, updates: DataFrame, keys: Seq[String],
-      order: Seq[Column]): DataFrame =
-    MergeUpsert.merge(target, updates, keys, order)
-
-  override def upsertPartitions(batch: DataFrame, targetDir: String,
-      keys: Seq[String], order: Seq[Column], dayCol: String): Unit =
-    graft.streaming.FileStreamIngest.upsertIntoPartitionedParquet(
-      batch, targetDir, keys, order, dayCol)
-
-  override def upsert(batch: DataFrame, targetDir: String, keys: Seq[String],
-      order: Seq[Column]): Unit =
-    graft.streaming.FileStreamIngest.upsertIntoParquet(
-      batch, targetDir, keys, order)
-
-  override def compact(spark: SparkSession, dir: String, partitionCol: String,
-      targetFileBytes: Long, values: Seq[String]): Map[String, (Int, Int)] =
-    graft.sinks.Sinks.compactPartitions(spark, dir, partitionCol,
-      targetFileBytes, values)
-
-  override def vacuum(dir: String): (Int, Int) =
-    graft.sinks.Sinks.vacuumStaging(dir)
-
-  override def readTable(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir)
 }

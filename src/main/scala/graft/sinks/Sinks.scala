@@ -60,108 +60,6 @@ object Sinks {
       .write.mode(SaveMode.Overwrite).parquet(outDir)
   }
 
-  /** Small-file compaction for a partitioned parquet table — the
-    * plain-Spark `OPTIMIZE` (Delta's bin-packing, `databricks` maintenance
-    * step the reference schedules): rewrite each selected partition into
-    * ⌈bytes / targetFileBytes⌉ files. Streaming appends and per-day
-    * backfills accrete small files; at 100 TB the file count — not the
-    * byte count — is what kills scan planning and open() overhead, so
-    * compaction after ingest is a first-class maintenance operation.
-    *
-    * Per-partition loop by design (callers pass the partitions just
-    * ingested, e.g. yesterday): each value is one pruned read + one
-    * staged rewrite, exactly like Delta's per-partition OPTIMIZE
-    * granularity. Partitions already at-or-under target are left
-    * untouched (no rewrite, no mtime churn). Returns
-    * (value → (filesBefore, filesAfter)) with filesAfter RE-LISTED from
-    * disk (empty write tasks emit no file, so the prediction can overshoot).
-    *
-    * Crash safety: compaction holds the ONLY copy of the data it
-    * rewrites, so the replacement materializes fully in a sibling staged
-    * dir BEFORE the live directory moves; the swap is two renames with a
-    * `.compact-old` backup, and an interrupted run is recovered at the
-    * start of the next call — the same stage-then-swap discipline as the
-    * streaming upsert. Dot-prefixed staging dirs are invisible to Spark
-    * readers. Single-writer, local/HDFS rename semantics (an object store
-    * without atomic rename needs a real table format).
-    */
-  def compactPartitions(spark: SparkSession, dir: String, partitionCol: String,
-      targetFileBytes: Long, values: Seq[String]): Map[String, (Int, Int)] = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    require(targetFileBytes > 0)
-    values.map { v =>
-      // partition values are escaped in Hive-style paths (':' → %3A etc.)
-      // — building the path from the raw value would silently no-op
-      val enc = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .escapePathName(v)
-      val pdir = Paths.get(dir, s"$partitionCol=$enc")
-      val oldDir = Paths.get(dir, s".compact-old-$partitionCol=$enc")
-      val staged = Paths.get(dir, s".compact-staged-$partitionCol=$enc")
-      // recovery from a previous interrupted compaction of this value
-      if (Files.exists(oldDir) && !Files.exists(pdir))
-        Files.move(oldDir, pdir, StandardCopyOption.ATOMIC_MOVE)
-      deleteRecursively(oldDir) // stale backup of a completed swap
-      deleteRecursively(staged) // incomplete staged write
-      def partFiles() =
-        if (!Files.isDirectory(pdir)) Array.empty[java.nio.file.Path]
-        else {
-          val s = Files.list(pdir)
-          try s.toArray.map(_.asInstanceOf[java.nio.file.Path])
-            .filter(_.getFileName.toString.startsWith("part-"))
-          finally s.close()
-        }
-      val files = partFiles()
-      val bytes = files.map(Files.size).sum
-      val target = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-      if (files.length > target) {
-        spark.read.parquet(pdir.toString).repartition(target)
-          .write.parquet(staged.toString)
-        // replacement fully on disk — now swap the live directory
-        Files.move(pdir, oldDir, StandardCopyOption.ATOMIC_MOVE)
-        Files.move(staged, pdir, StandardCopyOption.ATOMIC_MOVE)
-        deleteRecursively(oldDir)
-        v -> (files.length, partFiles().length)
-      } else v -> (files.length, files.length)
-    }.toMap
-  }
-
-  /** Sweep orphaned compaction artifacts under a table directory — the
-    * VACUUM companion to [[compactPartitions]] for partitions a crashed
-    * run never revisits. RESTORE-first: a `.compact-old` backup whose live
-    * partition is missing is moved back (that data is the only copy), and
-    * only then are stale backups and incomplete staged writes deleted.
-    * Returns (restored, deleted) counts.
-    */
-  def vacuumStaging(dir: String): (Int, Int) = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val root = Paths.get(dir)
-    if (!Files.isDirectory(root)) return (0, 0)
-    val entries = {
-      val s = Files.list(root)
-      try s.toArray.map(_.asInstanceOf[java.nio.file.Path]) finally s.close()
-    }
-    var restored = 0
-    var deleted = 0
-    entries.filter(_.getFileName.toString.startsWith(".compact-old-")).foreach { op =>
-      val live = root.resolve(op.getFileName.toString.stripPrefix(".compact-old-"))
-      if (!Files.exists(live)) {
-        Files.move(op, live, StandardCopyOption.ATOMIC_MOVE); restored += 1
-      } else { deleteRecursively(op); deleted += 1 }
-    }
-    entries.filter(_.getFileName.toString.startsWith(".compact-staged-")).foreach { sp =>
-      deleteRecursively(sp); deleted += 1
-    }
-    (restored, deleted)
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      val s = java.nio.file.Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.delete(f))
-      finally s.close()
-    }
-
   /** Bucketed managed table: hash-bucket by join key so equi-joins and
     * aggregations on `bucketCols` between co-bucketed tables run with NO
     * shuffle exchange — the co-located-join layout for fact×fact joins at

@@ -847,7 +847,7 @@ final class CommitLogScan(spark: SparkSession, table: CommitLogTable,
       // group by the STRING tuple the writer serialized (canonical per
       // value — every file of one partition carries identical strings)
       val keyed = prunedFiles.groupBy(_.partitionVals).toSeq
-        .sortBy(_._1.mkString(" "))
+        .sortBy(_._1.mkString("\u0000"))
         .map { case (tuple, fs) =>
           val vs = tuple.zip(fields).map { case (s, f) =>
             val v =

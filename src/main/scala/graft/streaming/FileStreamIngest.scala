@@ -5,10 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.operators.MergeUpsert
-
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.Comparator
+import graft.operators.TableOps
 
 /** Incremental file-stream ingestion — the open-source analogue of the
   * reference's Auto Loader notebooks.
@@ -22,16 +19,15 @@ import java.util.Comparator
   *   reference runs on a schedule).
   *
   * Silver (`docs/databricks_setup.md:170-198` + the CDF note at
-  * `bronze_prices_auto_loader.ipynb:158`): without Delta's MERGE/CDF, each
-  * micro-batch IS the change set — `foreachBatch` runs the latest-wins
-  * upsert against the current Silver snapshot. Two variants:
-  *   - [[upsertIntoPartitionedParquet]] (preferred): day-partitioned
-  *     snapshot, merge reads ONLY the partitions the batch touches and
-  *     dynamic partition overwrite rewrites only those — O(batch days), the
-  *     same file-pruning a Delta MERGE gets from its transaction log;
-  *   - [[upsertIntoParquet]] (legacy, unpartitioned): full-snapshot
-  *     stage-then-swap, O(target) per batch — only for small dimension-like
-  *     targets.
+  * `bronze_prices_auto_loader.ipynb:158`): each micro-batch is the change
+  * set — `foreachBatch` applies it as one latest-wins MERGE commit through
+  * the [[graft.operators.TableOps]] seam, whose one backend is the
+  * [[graft.tables.CommitLogTable]] format. The merge reads and rewrites
+  * only the day partitions the batch touches (manifest-level pruning, the
+  * file-pruning a Delta MERGE gets from its transaction log), and readers
+  * resolve an isolated snapshot, so a commit in flight is never half
+  * visible. Keyed upserts converge on a checkpointed replay, so the
+  * Silver runners are exactly-once.
   */
 object FileStreamIngest {
 
@@ -313,22 +309,14 @@ object FileStreamIngest {
       } finally cached.unpersist()
     }
 
-  /** Silver: AvailableNow stream where each micro-batch latest-wins-merges
-    * into the parquet snapshot at `targetDir` (CDF emulation: the batch is
-    * the change set). Unpartitioned legacy variant.
-    */
-  def runAvailableNowUpsert(df: DataFrame, targetDir: String, checkpointDir: String,
-      keys: Seq[String], order: Seq[Column]): Unit =
-    runAvailableNowForeachBatch(df, checkpointDir)(
-      upsertIntoParquet(_, targetDir, keys, order))
-
-  /** Silver: partition-pruned streaming upsert — day-partitioned snapshot,
-    * only partitions present in the batch are read and rewritten.
+  /** Silver: partition-pruned streaming upsert — each micro-batch is one
+    * MERGE commit that reads and rewrites only the day partitions present
+    * in the batch.
     */
   def runAvailableNowUpsertPartitioned(df: DataFrame, targetDir: String,
       checkpointDir: String, keys: Seq[String], order: Seq[Column],
       dayCol: String,
-      ops: graft.operators.TableOps = graft.operators.TableOps.default): Unit =
+      ops: TableOps = TableOps.commitLog): Unit =
     runAvailableNowForeachBatch(df, checkpointDir)(
       ops.upsertPartitions(_, targetDir, keys, order, dayCol))
 
@@ -346,7 +334,7 @@ object FileStreamIngest {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.ProcessingTime(interval))
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.TableOps.default.upsertPartitions(batch, targetDir, keys, order, dayCol)
+        TableOps.commitLog.upsertPartitions(batch, targetDir, keys, order, dayCol)
       }
       .start()
 
@@ -376,13 +364,13 @@ object FileStreamIngest {
     * `event_id`, so rows that PASS the DQ gate must carry a non-null
     * `event_id` for replay convergence — gate NULL ids with a
     * `not_null(event_id)` expectation (they then converge in quarantine).
-    * All storage goes through the [[graft.operators.TableOps]] seam, so
-    * the plain-parquet and transactional commit-log bindings both run the
-    * pipeline unchanged.
+    * All storage goes through the [[graft.operators.TableOps]] seam: each
+    * table gets one atomic commit per batch, and the real-Delta binding
+    * runs the pipeline unchanged.
     */
   def medallionBatch(batch: DataFrame, outRoot: String,
       rules: Seq[graft.operators.Expectations.Expectation],
-      ops: graft.operators.TableOps = graft.operators.TableOps.default): Unit = {
+      ops: TableOps = TableOps.commitLog): Unit = {
     import graft.operators.{Expectations, GoldFeatures, Normalize}
     val spark = batch.sparkSession
     val cached = batch.persist()
@@ -394,12 +382,12 @@ object FileStreamIngest {
     val normalized = Normalize.events(Expectations.enforce(cached, rules)).persist()
     var gold: DataFrame = null
     try {
-      // through the seam like silver/gold — under the commit-log binding
-      // the quarantine table gets the same atomic commits and CDF.
-      // Keyed on a NON-NULL surrogate, not event_id directly: quarantine
-      // is exactly where malformed rows land, and a NULL merge key never
-      // equi-matches (it inserts unconditionally) — a checkpointed replay
-      // after a crash would re-insert every NULL-keyed row on each retry.
+      // through the seam like silver/gold: the quarantine table gets the
+      // same atomic commits and CDF. Keyed on a NON-NULL surrogate, not
+      // event_id directly: quarantine is exactly where malformed rows
+      // land, and a NULL merge key never equi-matches (it inserts
+      // unconditionally) — a checkpointed replay after a crash would
+      // re-insert every NULL-keyed row on each retry.
       // coalesce(event_id, sha256(full row)) is replay-deterministic, so
       // retries converge for malformed rows too (identical malformed rows
       // collapse to one — the price of idempotence, since replays cannot
@@ -418,7 +406,7 @@ object FileStreamIngest {
         val silverDir = s"$outRoot/silver"
         // day rides the merge key (it is a function of ts, so the pair is
         // as unique as event_id alone) — the partition-stability contract
-        // both upsert bindings want
+        // the pruned merge wants
         ops.upsertPartitions(normalized, silverDir,
           keys = Seq("event_id", "day"), order = Seq(col("ts").desc),
           dayCol = "day")
@@ -446,7 +434,7 @@ object FileStreamIngest {
   def runProcessingTimeMedallion(df: DataFrame, outRoot: String,
       checkpointDir: String,
       rules: Seq[graft.operators.Expectations.Expectation],
-      ops: graft.operators.TableOps = graft.operators.TableOps.default,
+      ops: TableOps = TableOps.commitLog,
       interval: String = "5 minutes"): StreamingQuery =
     df.writeStream
       .outputMode("append")
@@ -463,204 +451,7 @@ object FileStreamIngest {
   def runAvailableNowMedallion(df: DataFrame, outRoot: String,
       checkpointDir: String,
       rules: Seq[graft.operators.Expectations.Expectation],
-      ops: graft.operators.TableOps = graft.operators.TableOps.default): Unit =
+      ops: TableOps = TableOps.commitLog): Unit =
     runAvailableNowForeachBatch(df, checkpointDir)(
       medallionBatch(_, outRoot, rules, ops))
-
-  /** Latest-wins upsert of `batch` into the DAY-PARTITIONED parquet
-    * snapshot at `targetDir`: read only the partitions the batch touches
-    * (partition pruning), merge, and swap in exactly those — untouched day
-    * directories are never rewritten. This is the shape that survives a
-    * 100 TB Silver table: per-batch cost is O(touched days), not O(target).
-    *
-    * Crash safety (per-partition stage-then-rename): the merged output
-    * materializes in a sibling `.staged` dir BEFORE the snapshot is
-    * touched; each touched `day=` directory is then staged to `.old`,
-    * renamed in, and its `.old` dropped. A crash anywhere leaves every day
-    * either intact, or restorable from `.old` — the recovery sweep at the
-    * start of the next call restores it, so the checkpointed foreachBatch
-    * retry always merges against an uncorrupted snapshot (the property
-    * Delta's transactional MERGE gives the reference). Single-writer, like
-    * [[upsertIntoParquet]]; directory renames are atomic on local/HDFS
-    * filesystems — an object store without atomic rename needs a real
-    * table format instead.
-    *
-    * Requires `dayCol ∈ keys` (the merge key must determine the partition,
-    * as with the reference's (symbol, trade_date) key / trade_date
-    * partitioning) — otherwise a key's latest row could move between days
-    * and the pruned merge could not retract the old day's row. `dayCol`
-    * should be a DateType/string column with stable text form (partition
-    * values round-trip through directory names).
-    *
-    * Reader visibility: crash safety covers the WRITER, not concurrent
-    * readers — between the two renames of a touched `day=X` the partition
-    * is briefly absent, so a snapshot scan racing a batch commit can miss
-    * it. Readers must not scan while a commit is in flight (schedule reads
-    * between batches, or publish the snapshot path via a catalog pointer
-    * flipped after the swap). Delta's log gives the reference this
-    * isolation for free; plain parquet directories cannot.
-    */
-  def upsertIntoPartitionedParquet(batch: DataFrame, targetDir: String,
-      keys: Seq[String], order: Seq[Column], dayCol: String): Unit = lockFor(targetDir).synchronized {
-    require(keys.contains(dayCol),
-      s"dayCol '$dayCol' must be part of the merge key ${keys.mkString("[", ",", "]")}")
-    requireLocalPath(targetDir)
-    if (batch.isEmpty) return // no-data micro-batch: nothing to merge
-    val spark = batch.sparkSession
-    val target = Paths.get(targetDir)
-    val oldRoot = Paths.get(targetDir + ".old")
-    recoverPartitionSwaps(target, oldRoot)
-    // touched partitions: bounded by days-per-batch, safe to collect
-    val days = batch.select(col(dayCol)).distinct().collect().map(_.get(0))
-    if (!Files.exists(target)) {
-      // bootstrap: nothing to corrupt, write the deduped batch directly
-      graft.operators.Dedup.keepLast(batch, keys, order)
-        .write.mode(SaveMode.Overwrite).partitionBy(dayCol).parquet(targetDir)
-      return
-    }
-    // NULL day values must select the target's null-day rows too:
-    // isin(null) never evaluates TRUE, yet the swap below replaces the
-    // day=__HIVE_DEFAULT_PARTITION__ dir — without the isNull leg the
-    // target's existing null-day rows would be silently lost
-    val nonNull = days.filter(_ != null).toIndexedSeq
-    val dayPred =
-      if (days.contains(null)) col(dayCol).isin(nonNull: _*) || col(dayCol).isNull
-      else col(dayCol).isin(nonNull: _*)
-    // mergeSchema: a previous wider batch may have evolved the seam, so
-    // the target holds mixed per-partition schemas — single-footer
-    // inference could resolve a pre-evolution file, alignToBatch would
-    // null-backfill the evolved column, and carried-over rows would
-    // silently lose their real values on the rewrite
-    val current = alignToBatch(
-      spark.read.option("mergeSchema", "true").parquet(targetDir).filter(dayPred),
-      batch)
-    val merged = MergeUpsert.merge(current, batch, keys, order)
-    val staged = Paths.get(targetDir + ".staged")
-    deleteRecursively(staged)
-    merged.write.partitionBy(dayCol).parquet(staged.toString)
-    // per-partition swap: target/day=X → .old/day=X → replaced → .old
-    // dropped; the snapshot is only mutated AFTER the merge fully wrote
-    Files.createDirectories(oldRoot)
-    listDir(staged)
-      .filter(p => Files.isDirectory(p) &&
-        p.getFileName.toString.startsWith(s"$dayCol="))
-      .foreach { sp =>
-        val dirName = sp.getFileName
-        val tp = target.resolve(dirName)
-        val op = oldRoot.resolve(dirName)
-        deleteRecursively(op)
-        if (Files.exists(tp)) Files.move(tp, op, StandardCopyOption.ATOMIC_MOVE)
-        Files.move(sp, tp, StandardCopyOption.ATOMIC_MOVE)
-        deleteRecursively(op)
-      }
-    deleteRecursively(staged)
-    deleteRecursively(oldRoot)
-  }
-
-  /** Restore any day partition whose swap was interrupted: a `.old/day=X`
-    * with no live `day=X` means the crash hit between the two renames —
-    * move it back; a `.old/day=X` next to a live one is a stale backup —
-    * drop it.
-    */
-  private def recoverPartitionSwaps(target: Path, oldRoot: Path): Unit =
-    if (Files.exists(oldRoot)) {
-      listDir(oldRoot).foreach { op =>
-        val tp = target.resolve(op.getFileName)
-        if (!Files.exists(tp)) Files.move(op, tp, StandardCopyOption.ATOMIC_MOVE)
-        else deleteRecursively(op)
-      }
-      deleteRecursively(oldRoot)
-    }
-
-  /** Latest-wins upsert of `batch` into the unpartitioned parquet dir at
-    * `targetDir` (created if absent), staged to a sibling dir then renamed
-    * into place. Single-writer only (`synchronized` guards one JVM; nothing
-    * guards concurrent writers on a shared filesystem). A crash between the
-    * two renames leaves data in `targetDir.old` — recovered on the next
-    * call.
-    */
-  def upsertIntoParquet(batch: DataFrame, targetDir: String,
-      keys: Seq[String], order: Seq[Column]): Unit = lockFor(targetDir).synchronized {
-    requireLocalPath(targetDir)
-    if (batch.isEmpty) return // no-data micro-batch: keep the snapshot as-is
-    val spark = batch.sparkSession
-    val target = Paths.get(targetDir)
-    val old = Paths.get(targetDir + ".old")
-    // crash recovery: an interrupted swap leaves target missing and .old
-    // holding the last good snapshot — restore it before merging
-    if (!Files.exists(target) && Files.exists(old))
-      Files.move(old, target, StandardCopyOption.ATOMIC_MOVE)
-    val merged =
-      if (Files.exists(target)) {
-        MergeUpsert.merge(alignToBatch(spark.read.parquet(targetDir), batch),
-          batch, keys, order)
-      } else {
-        graft.operators.Dedup.keepLast(batch, keys, order)
-      }
-    val staged = Paths.get(targetDir + ".staged")
-    deleteRecursively(staged)
-    merged.write.parquet(staged.toString)
-    deleteRecursively(old)
-    if (Files.exists(target)) Files.move(target, old, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(staged, target, StandardCopyOption.ATOMIC_MOVE)
-    deleteRecursively(old)
-  }
-
-  // single-writer safety without cross-table serialization: one monitor
-  // per canonical target path — two pipelines upserting DIFFERENT tables
-  // in one JVM must not wait on each other for the duration of a write job
-  private val targetLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private def lockFor(targetDir: String): Object =
-    targetLocks.computeIfAbsent(
-      Paths.get(targetDir).toAbsolutePath.normalize.toString,
-      _ => new Object)
-
-  /** The stage-then-rename emulation is java.nio-local by construction; a
-    * remote URI would silently resolve as a relative LOCAL path, miss the
-    * existing table, and bootstrap-Overwrite the real one on every batch.
-    * Fail loudly instead — a remote deployment mounts the commit-log (or a
-    * real table format), not the rename emulation.
-    */
-  private def requireLocalPath(targetDir: String): Unit =
-    require(graft.tables.GPath.schemeOf(targetDir).isEmpty,
-      s"upsert emulation requires a bare local path, got URI '$targetDir' " +
-        "— its isolation rides atomic POSIX directory renames; use " +
-        "TableOps.commitLog (any scheme) for remote storage")
-
-  /** Project the live table to the batch's schema. A NARROWER batch is
-    * refused (it would silently project existing columns AWAY from every
-    * rewritten partition); a WIDER batch EVOLVES the rewritten
-    * partitions — missing columns null-backfill, so a pipeline restarted
-    * with an upgraded schema (a widened source, or an upgraded engine
-    * adding a column like the quarantine surrogate key) keeps flowing
-    * over a pre-evolution snapshot instead of crashing on the first
-    * micro-batch. This is the parquet-seam mirror of the commit-log
-    * binding's auto-mergeSchema.
-    */
-  private def alignToBatch(current: DataFrame, batch: DataFrame): DataFrame = {
-    val extraT = current.columns.toSet -- batch.columns
-    require(extraT.isEmpty,
-      s"batch is missing table columns ${extraT.mkString(",")} — a " +
-        "narrower upsert would silently drop them from rewritten partitions")
-    current.select(batch.schema.fields.map(f =>
-      if (current.columns.contains(f.name)) col(f.name)
-      else lit(null).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
-  }
-
-  // NIO directory streams hold an fd until closed — a long-running
-  // foreachBatch stream would leak one per micro-batch without the
-  // try/finally (GC closes them eventually, but fd exhaustion comes first
-  // on a busy ingest node)
-  private def listDir(p: Path): Array[Path] = {
-    val s = Files.list(p)
-    try s.toArray.map(_.asInstanceOf[Path]) finally s.close()
-  }
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
-      finally s.close()
-    }
 }

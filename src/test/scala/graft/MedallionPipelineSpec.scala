@@ -15,8 +15,9 @@ import graft.streaming.FileStreamIngest
   * mid-stream ("crash"), restarted from its checkpoint, and required to
   * land row-for-row on the BATCH pipeline's answers: silver ==
   * `Normalize.events`, gold == `q_gold_features`'s window view,
-  * quarantine == the batch DQ sweep. Exactly-once comes from keyed
-  * upserts at every sink — a replayed micro-batch converges instead of
+  * quarantine == the batch DQ sweep. Every sink is a commit-log table
+  * read through its snapshot. Exactly-once comes from keyed upserts at
+  * every sink — a replayed micro-batch converges instead of
   * double-appending, which the replay test pins directly.
   */
 class MedallionPipelineSpec extends AnyFunSuite {
@@ -59,6 +60,8 @@ class MedallionPipelineSpec extends AnyFunSuite {
     assert(g.exceptAll(want).isEmpty && want.exceptAll(g).isEmpty)
   }
 
+  private def read(dir: String): DataFrame = TableOps.commitLog.readTable(spark, dir)
+
   test("always-on medallion: crash/restart, then exact batch parity for silver/gold/quarantine") {
     val src = tmp("src"); val out = tmp("out"); val ckpt = tmp("ckpt")
     val all = corpus()
@@ -76,7 +79,7 @@ class MedallionPipelineSpec extends AnyFunSuite {
     try q1.processAllAvailable() finally q1.stop() // "crash" between batches
 
     // intermediate state is itself the batch answer over wave 1
-    assertSameSet(spark.read.parquet(s"$out/gold"), batchGold(wave1))
+    assertSameSet(read(s"$out/gold"), batchGold(wave1))
 
     wave2.write.mode("append").parquet(src)
     val q2 = FileStreamIngest.runProcessingTimeMedallion(
@@ -84,13 +87,13 @@ class MedallionPipelineSpec extends AnyFunSuite {
       interval = "50 milliseconds")
     try q2.processAllAvailable() finally q2.stop()
 
-    val silver = spark.read.parquet(s"$out/silver")
+    val silver = read(s"$out/silver")
     assertSameSet(silver, Normalize.events(all))
     // exactly-once: one row per event
     assert(silver.select(countDistinct($"event_id")).as[Long].head() ==
       silver.count())
-    assertSameSet(spark.read.parquet(s"$out/gold"), batchGold(all))
-    val quar = spark.read.parquet(s"$out/quarantine")
+    assertSameSet(read(s"$out/gold"), batchGold(all))
+    val quar = read(s"$out/quarantine")
     assert(quar.select("event_id").as[Long].collect().sorted.toSeq ==
       Seq(900001L, 900002L, 900003L))
     assert(quar.select("dq_reason").as[String].collect().toSet ==
@@ -99,18 +102,15 @@ class MedallionPipelineSpec extends AnyFunSuite {
     // checkpoint replay convergence: re-running an already-committed
     // micro-batch (what a crash INSIDE foreachBatch causes on restart)
     // leaves every table unchanged — all sinks are keyed upserts
-    // materialize the pre-replay snapshot: the replay's upsert swaps the
-    // underlying files, so a lazy frame over them would dangle
-    val goldDf = spark.read.parquet(s"$out/gold")
-    val goldCols = goldDf.columns.sorted.toSeq
-    def goldRows() = spark.read.parquet(s"$out/gold")
+    val goldCols = read(s"$out/gold").columns.sorted.toSeq
+    def goldRows() = read(s"$out/gold")
       .select(goldCols.map(col): _*).collect().map(_.toString).sorted.toSeq
     val before = goldRows()
     val quarCount = quar.count()
     FileStreamIngest.medallionBatch(wave2, out, rules)
-    assertSameSet(spark.read.parquet(s"$out/silver"), Normalize.events(all))
+    assertSameSet(read(s"$out/silver"), Normalize.events(all))
     assert(goldRows() == before)
-    assert(spark.read.parquet(s"$out/quarantine").count() == quarCount)
+    assert(read(s"$out/quarantine").count() == quarCount)
   }
 
   test("ALWAYS-ON medallion over transactional tables: crash/restart, atomic commits, batch parity") {
@@ -123,19 +123,17 @@ class MedallionPipelineSpec extends AnyFunSuite {
     wave1.write.mode("append").parquet(src)
     val q1 = FileStreamIngest.runProcessingTimeMedallion(
       FileStreamIngest.bronzeStream(spark, src, schema), out, ckpt, rules,
-      ops = TableOps.commitLog, interval = "50 milliseconds")
+      interval = "50 milliseconds")
     try q1.processAllAvailable() finally q1.stop() // crash between batches
 
     wave2.write.mode("append").parquet(src)
     val q2 = FileStreamIngest.runProcessingTimeMedallion(
       FileStreamIngest.bronzeStream(spark, src, schema), out, ckpt, rules,
-      ops = TableOps.commitLog, interval = "50 milliseconds")
+      interval = "50 milliseconds")
     try q2.processAllAvailable() finally q2.stop()
 
-    assertSameSet(TableOps.commitLog.readTable(spark, s"$out/silver"),
-      Normalize.events(all))
-    assertSameSet(TableOps.commitLog.readTable(spark, s"$out/gold"),
-      batchGold(all))
+    assertSameSet(read(s"$out/silver"), Normalize.events(all))
+    assertSameSet(read(s"$out/gold"), batchGold(all))
     // every micro-batch landed as one atomic MERGE commit per table, and
     // the change feed replays the whole silver history
     val silverT = graft.tables.CommitLogTable.open(spark, s"$out/silver")
@@ -145,8 +143,7 @@ class MedallionPipelineSpec extends AnyFunSuite {
       .filter($"_change_type" === "insert").count()
     assert(inserted == Normalize.events(all).count(),
       "CDF insert images must cover exactly the silver rows")
-    // quarantine goes through the same seam: transactional too
-    val quar = TableOps.commitLog.readTable(spark, s"$out/quarantine")
+    val quar = read(s"$out/quarantine")
     assert(quar.select("event_id").as[Long].collect().sorted.toSeq ==
       Seq(900001L, 900002L, 900003L))
   }
@@ -165,14 +162,14 @@ class MedallionPipelineSpec extends AnyFunSuite {
       .select(col("event_id"), col("ts").cast("timestamp"), col("user_id"),
         col("event_type"), col("value"))
     FileStreamIngest.medallionBatch(bad, out, rules)
-    val first = spark.read.parquet(s"$out/quarantine")
+    val first = read(s"$out/quarantine")
     assert(first.count() == 2)
     assert(first.filter(col("quarantine_key").isNull).isEmpty,
       "the surrogate key must be non-null even for NULL-id rows")
     // a crash inside foreachBatch replays the batch verbatim — the keyed
     // upsert must converge instead of double-appending the NULL-id row
     FileStreamIngest.medallionBatch(bad, out, rules)
-    assert(spark.read.parquet(s"$out/quarantine").count() == 2,
+    assert(read(s"$out/quarantine").count() == 2,
       "replayed malformed rows re-inserted: quarantine diverges under replay")
   }
 
@@ -185,7 +182,7 @@ class MedallionPipelineSpec extends AnyFunSuite {
     narrow.write.mode("append").parquet(src)
     FileStreamIngest.runAvailableNowUpsertPartitioned(
       FileStreamIngest.bronzeStream(spark, src, narrow.schema), out, ckpt,
-      keys, Seq($"value"), "day", ops = TableOps.commitLog)
+      keys, Seq($"value"), "day")
     // restart with a WIDENED source schema — the reference's Auto Loader
     // addNewColumns restart (`docs/databricks_setup.md:120`): the new
     // column must evolve the silver table in place, not crash the stream
@@ -195,7 +192,7 @@ class MedallionPipelineSpec extends AnyFunSuite {
     wide.write.mode("append").parquet(src)
     FileStreamIngest.runAvailableNowUpsertPartitioned(
       FileStreamIngest.bronzeStream(spark, src, wide.schema), out, ckpt,
-      keys, Seq($"value"), "day", ops = TableOps.commitLog)
+      keys, Seq($"value"), "day")
     val t = graft.tables.CommitLogTable.open(spark, out)
     assert(t.read().columns.toSeq == Seq("event_id", "day", "value", "source"))
     val got = t.read().select("event_id", "value", "source").collect()
@@ -210,12 +207,10 @@ class MedallionPipelineSpec extends AnyFunSuite {
     val all = corpus()
     val wave1 = all.filter($"event_id" % 2 === 0)
     val wave2 = all.filter($"event_id" % 2 === 1)
-    FileStreamIngest.medallionBatch(wave1, out, rules, TableOps.commitLog)
-    FileStreamIngest.medallionBatch(wave2, out, rules, TableOps.commitLog)
-    val silver = TableOps.commitLog.readTable(spark, s"$out/silver")
-    assertSameSet(silver, Normalize.events(all))
-    assertSameSet(TableOps.commitLog.readTable(spark, s"$out/gold"),
-      batchGold(all))
+    FileStreamIngest.medallionBatch(wave1, out, rules)
+    FileStreamIngest.medallionBatch(wave2, out, rules)
+    assertSameSet(read(s"$out/silver"), Normalize.events(all))
+    assertSameSet(read(s"$out/gold"), batchGold(all))
     // each batch = one atomic MERGE commit on each table
     val hist = graft.tables.CommitLogTable.open(spark, s"$out/gold")
       .history.select("action").as[String].collect().toSeq

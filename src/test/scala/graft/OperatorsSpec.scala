@@ -52,7 +52,7 @@ class OperatorsSpec extends AnyFunSuite {
     val updates = Seq((1L, "a", 20L, None: Option[Double]), (3L, "c", 20L, Some(3.0)))
       .toDF("k", "t", "ord", "v")
     // through the TableOps facade: the seam a Delta impl slots into
-    val out = TableOps.default.merge(target, updates, Seq("k", "t"), Seq($"ord".desc))
+    val out = TableOps.commitLog.merge(target, updates, Seq("k", "t"), Seq($"ord".desc))
       .collect().map(r => (r.getLong(0), (r.getLong(2), Option(r.get(3))))).toMap
     assert(out(1L) == (20L, None))       // update wins, null value kept
     assert(out(2L) == (10L, Some(2.0)))  // untouched target

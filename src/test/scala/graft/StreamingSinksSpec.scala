@@ -3,8 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.TableOps
 import graft.sinks.Sinks
 import graft.streaming.FileStreamIngest
+import graft.tables.CommitLogTable
 
 import java.nio.file.Files
 
@@ -82,14 +84,14 @@ class StreamingSinksSpec extends AnyFunSuite {
       interval = "50 milliseconds")
     try {
       q.processAllAvailable()
-      assert(spark.read.parquet(target).count() == 2)
+      assert(TableOps.commitLog.readTable(spark, target).count() == 2)
       // a later wave for the same key arrives while the query runs
       Seq((1L, "2024-01-01", 20L, 9.0)).toDF("k", "day", "ord", "v")
         .write.mode("append").parquet(src)
       q.processAllAvailable()
     } finally q.stop()
-    val after = spark.read.parquet(target).collect()
-      .map(r => r.getLong(0) -> r.getDouble(2)).toMap
+    val after = TableOps.commitLog.readTable(spark, target).collect()
+      .map(r => r.getAs[Long]("k") -> r.getAs[Double]("v")).toMap
     assert(after == Map(1L -> 9.0, 2L -> 2.0)) // latest won, other day intact
   }
 
@@ -98,19 +100,18 @@ class StreamingSinksSpec extends AnyFunSuite {
     val b1 = Seq((1L, 10L, 1.0), (2L, 10L, 2.0)).toDF("k", "ord", "v")
     b1.write.mode("append").parquet(src)
     val schema = b1.schema
-    FileStreamIngest.runAvailableNowUpsert(
-      FileStreamIngest.bronzeStream(spark, src, schema),
-      target, ckpt, Seq("k"), Seq($"ord".desc))
-    val after1 = spark.read.parquet(target).collect()
+    def drain(): Unit = FileStreamIngest.runAvailableNowForeachBatch(
+      FileStreamIngest.bronzeStream(spark, src, schema), ckpt)(
+      TableOps.commitLog.upsert(_, target, Seq("k"), Seq($"ord".desc)))
+    drain()
+    val after1 = TableOps.commitLog.readTable(spark, target).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
     assert(after1 == Map(1L -> (10L, 1.0), 2L -> (10L, 2.0)))
 
     val b2 = Seq((1L, 20L, 9.0), (3L, 20L, 3.0)).toDF("k", "ord", "v")
     b2.write.mode("append").parquet(src)
-    FileStreamIngest.runAvailableNowUpsert(
-      FileStreamIngest.bronzeStream(spark, src, schema),
-      target, ckpt, Seq("k"), Seq($"ord".desc))
-    val after2 = spark.read.parquet(target).collect()
+    drain()
+    val after2 = TableOps.commitLog.readTable(spark, target).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
     assert(after2 == Map(1L -> (20L, 9.0), 2L -> (10L, 2.0), 3L -> (20L, 3.0)))
   }
@@ -184,17 +185,21 @@ class StreamingSinksSpec extends AnyFunSuite {
     // key) must keep flowing over the old-format snapshot
     val dir = tmp("upw") + "/tbl"
     val old = Seq((1L, 1.0)).toDF("k", "v")
-    FileStreamIngest.upsertIntoParquet(old, dir, Seq("k"), Seq($"v"))
+    TableOps.commitLog.upsert(old, dir, Seq("k"), Seq($"v"))
     val wide = Seq((2L, 2.0, "x")).toDF("k", "v", "tag")
-    FileStreamIngest.upsertIntoParquet(wide, dir, Seq("k"), Seq($"v"))
-    val got = spark.read.parquet(dir)
+    TableOps.commitLog.upsert(wide, dir, Seq("k"), Seq($"v"))
+    val got = TableOps.commitLog.readTable(spark, dir)
     assert(got.columns.toSet == Set("k", "v", "tag"))
-    val byK = got.collect().map(r => r.getLong(0) ->
+    val byK = got.collect().map(r => r.getAs[Long]("k") ->
       Option(r.getAs[String]("tag"))).toMap
     assert(byK == Map(1L -> None, 2L -> Some("x")))
-    // a NARROWER batch is still refused loudly
+    // a NARROWER batch is still refused loudly, and commits nothing
+    val t = CommitLogTable.open(spark, dir)
+    val head = t.latestVersion
     intercept[IllegalArgumentException](
-      FileStreamIngest.upsertIntoParquet(old, dir, Seq("k"), Seq($"v")))
+      TableOps.commitLog.upsert(old, dir, Seq("k"), Seq($"v")))
+    assert(t.latestVersion == head)
+    assert(t.read().columns.toSet == Set("k", "v", "tag"))
   }
 
   test("commit-log bronze append: exactly-once blind appends via txn watermark, replay converges") {
@@ -291,51 +296,28 @@ class StreamingSinksSpec extends AnyFunSuite {
     val b1 = Seq(
       (1L, Date.valueOf("2024-01-01"), 10L, 1.0),
       (2L, Date.valueOf("2024-01-02"), 10L, 2.0)).toDF("k", "day", "ord", "v")
-    graft.operators.TableOps.default.upsertPartitions(
+    TableOps.commitLog.upsertPartitions(
       b1, target, Seq("k", "day"), Seq($"ord".desc), "day")
+    // the day-1 files of the latest snapshot, with their bytes
     def day1Bytes: Map[String, Seq[Byte]] =
-      Files.walk(Paths.get(target, "day=2024-01-01")).toArray.map(_.toString)
-        .filter(_.endsWith(".parquet")).sorted
-        .map(p => p -> Files.readAllBytes(Paths.get(p)).toSeq).toMap
+      CommitLogTable.open(spark, target).readPartitions(Set("2024-01-01"))
+        .inputFiles.sorted
+        .map(p => p -> Files.readAllBytes(Paths.get(new java.net.URI(p))).toSeq)
+        .toMap
     val before = day1Bytes
+    assert(before.nonEmpty)
 
     // batch touches only 2024-01-02: update k=2, insert k=3
     val b2 = Seq(
       (2L, Date.valueOf("2024-01-02"), 20L, 9.0),
       (3L, Date.valueOf("2024-01-02"), 20L, 3.0)).toDF("k", "day", "ord", "v")
-    graft.operators.TableOps.default.upsertPartitions(
+    TableOps.commitLog.upsertPartitions(
       b2, target, Seq("k", "day"), Seq($"ord".desc), "day")
 
     assert(day1Bytes == before) // same files, same bytes — never rewritten
-    val got = spark.read.parquet(target).collect()
+    val got = TableOps.commitLog.readTable(spark, target).collect()
       .map(r => r.getAs[Long]("k") -> (r.getAs[Long]("ord"), r.getAs[Double]("v"))).toMap
     assert(got == Map(1L -> (10L, 1.0), 2L -> (20L, 9.0), 3L -> (20L, 3.0)))
-  }
-
-  test("partitioned upsert recovers an interrupted day-partition swap from .old") {
-    import java.nio.file.Paths
-    import java.sql.Date
-    val target = tmp("prec") + "/silver"
-    val b1 = Seq(
-      (1L, Date.valueOf("2024-01-01"), 10L, 1.0),
-      (2L, Date.valueOf("2024-01-02"), 10L, 2.0)).toDF("k", "day", "ord", "v")
-    graft.operators.TableOps.default.upsertPartitions(
-      b1, target, Seq("k", "day"), Seq($"ord".desc), "day")
-    // simulate a crash between the two renames of day=2024-01-01: the live
-    // dir is gone, .old holds the only copy
-    Files.createDirectories(Paths.get(target + ".old"))
-    Files.move(Paths.get(target, "day=2024-01-01"),
-      Paths.get(target + ".old", "day=2024-01-01"))
-    // the checkpointed retry merges a batch touching the OTHER day — the
-    // recovery sweep must restore day 1 first so nothing is lost
-    val b2 = Seq((2L, Date.valueOf("2024-01-02"), 20L, 9.0)).toDF("k", "day", "ord", "v")
-    graft.operators.TableOps.default.upsertPartitions(
-      b2, target, Seq("k", "day"), Seq($"ord".desc), "day")
-    val got = spark.read.parquet(target).collect()
-      .map(r => r.getAs[Long]("k") -> (r.getAs[Long]("ord"), r.getAs[Double]("v"))).toMap
-    assert(got == Map(1L -> (10L, 1.0), 2L -> (20L, 9.0)))
-    assert(!Files.exists(Paths.get(target + ".old"))) // backups cleaned up
-    assert(!Files.exists(Paths.get(target + ".staged")))
   }
 
   test("metrics JSON stays parseable: non-finite rates become null, strings escape fully") {
@@ -350,20 +332,6 @@ class StreamingSinksSpec extends AnyFunSuite {
     assert(parsed.getAs[String]("sink") == hostile) // round-trips, not corrupt
     assert(parsed.schema.fieldNames.contains("rate"))
     assert(!parsed.schema.fieldNames.contains("_corrupt_record"))
-  }
-
-  test("legacy upsert recovers .old snapshot after an interrupted swap") {
-    import java.nio.file.Paths
-    val target = tmp("rec") + "/silver"
-    val b1 = Seq((1L, 10L, 1.0)).toDF("k", "ord", "v")
-    FileStreamIngest.upsertIntoParquet(b1, target, Seq("k"), Seq($"ord".desc))
-    // simulate a crash between the two renames: target gone, .old holds data
-    Files.move(Paths.get(target), Paths.get(target + ".old"))
-    val b2 = Seq((2L, 20L, 2.0)).toDF("k", "ord", "v")
-    FileStreamIngest.upsertIntoParquet(b2, target, Seq("k"), Seq($"ord".desc))
-    val got = spark.read.parquet(target).collect()
-      .map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    assert(got == Map(1L -> 1.0, 2L -> 2.0)) // pre-crash row recovered
   }
 
   test("schema evolution: new column appends, history reads as null") {
@@ -449,7 +417,7 @@ class StreamingSinksSpec extends AnyFunSuite {
     // the streamed silver equals the one-shot batch dedup of ALL events
     val batch = graft.operators.Dedup.keepLast(ev,
       Seq("user_id", "event_type", "day"), Seq($"ts".desc, $"event_id".desc))
-    val streamed = spark.read.parquet(silver)
+    val streamed = TableOps.commitLog.readTable(spark, silver)
       .select(batch.columns.map(col): _*)
     assert(streamed.count() == batch.count())
     assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
@@ -758,83 +726,49 @@ class StreamingSinksSpec extends AnyFunSuite {
     assert(vals == Map("2024-01-01" -> 50.0, "2024-01-02" -> 2.0))
   }
 
+  /** A commit-log table partitioned by `partitionCol`, holding `df` as
+    * four appends — an append writes one file per partition, so each
+    * partition ends up with several small files.
+    */
+  private def fragmentedTable(dir: String, df: org.apache.spark.sql.DataFrame,
+      partitionCol: String): CommitLogTable = {
+    val t = CommitLogTable.create(spark, dir, df.schema, Seq(partitionCol))
+    val slice = pmod(xxhash64(df.columns.map(col).toIndexedSeq: _*), lit(4))
+    (0 until 4).foreach(i => t.append(df.filter(slice === i)))
+    t
+  }
+
   test("compaction: fragmented day rewritten to target, quiet day untouched") {
     val out = tmp("compact") + "/t"
     val manyFiles = (1 to 80).map(i => ("2024-01-01", i.toLong)).toDF("dt", "v")
-      .repartition(8) // day A: 8 small files
-    val oneFile = Seq(("2024-01-02", 1000L)).toDF("dt", "v").coalesce(1)
-    Sinks.partitionedParquet(manyFiles.union(oneFile).repartition(8), out, "dt",
-      force = true)
-    def partFiles(day: String) = {
-      val s = Files.list(java.nio.file.Paths.get(out, s"dt=$day"))
-      try s.toArray.map(_.asInstanceOf[java.nio.file.Path])
-        .filter(_.getFileName.toString.startsWith("part-")).map(_.toString)
-      finally s.close()
-    }
+    val t = fragmentedTable(out, manyFiles, "dt") // day A: several small files
+    t.append(Seq(("2024-01-02", 1000L)).toDF("dt", "v")) // day B: one file
+    def partFiles(day: String) = t.readPartitions(Set(day)).inputFiles.sorted.toSeq
     assert(partFiles("2024-01-01").length > 1)
-    val before = spark.read.parquet(out).collect()
-      .map(r => String.valueOf(r.getAs[Any]("dt")) -> r.getLong(0)).sorted.toSeq
-    val quietBefore = partFiles("2024-01-02").sorted.toSeq
+    def rows() = t.read().collect()
+      .map(r => r.getAs[String]("dt") -> r.getAs[Long]("v")).sorted.toSeq
+    val before = rows()
+    val quietBefore = partFiles("2024-01-02")
 
     // huge target → one file for the fragmented day; quiet day untouched
-    val report = graft.operators.TableOps.default.compact(spark, out, "dt",
+    val report = TableOps.commitLog.compact(spark, out, "dt",
       targetFileBytes = 1L << 30, values = Seq("2024-01-01", "2024-01-02"))
     assert(report("2024-01-01")._1 > 1 && report("2024-01-01")._2 == 1)
     assert(partFiles("2024-01-01").length == 1)
-    assert(partFiles("2024-01-02").sorted.toSeq == quietBefore) // no rewrite
-    val after = spark.read.parquet(out).collect()
-      .map(r => String.valueOf(r.getAs[Any]("dt")) -> r.getLong(0)).sorted.toSeq
-    assert(after == before) // byte-for-byte same data
+    assert(partFiles("2024-01-02") == quietBefore) // no rewrite
+    assert(rows() == before) // same data
   }
 
-  test("compaction recovery: interrupted swap restored; escaped partition values compact") {
-    import java.nio.file.{Paths, StandardCopyOption}
-    val out = tmp("crecov") + "/t"
-    val df = (1 to 40).map(i => ("2024-03-01", i.toLong)).toDF("dt", "v")
-      .repartition(4)
-    Sinks.partitionedParquet(df, out, "dt", force = true)
-    val live = Paths.get(out, "dt=2024-03-01")
-    val before = spark.read.parquet(out).collect().map(_.getLong(0)).sorted.toSeq
-    // simulate a crash between the two swap renames: live dir moved to the
-    // backup, replacement never arrived
-    Files.move(live, Paths.get(out, ".compact-old-dt=2024-03-01"),
-      StandardCopyOption.ATOMIC_MOVE)
-    assert(!Files.exists(live))
-    val report = graft.operators.TableOps.default.compact(spark, out, "dt",
-      targetFileBytes = 1L << 30, values = Seq("2024-03-01"))
-    assert(Files.exists(live)) // recovery sweep restored the partition
-    assert(report("2024-03-01")._2 == 1) // then compacted it
-    assert(spark.read.parquet(out).collect().map(_.getLong(0)).sorted.toSeq == before)
-
+  test("compaction: escaped partition values compact") {
     // a partition value Spark escapes in the path (':' → %3A) still
     // resolves — building from the raw value would silently no-op
-    val out2 = tmp("cesc") + "/t"
-    val df2 = (1 to 20).map(i => ("a:b", i.toLong)).toDF("k", "v").repartition(4)
-    Sinks.partitionedParquet(df2, out2, "k", force = true)
-    val r2 = graft.operators.TableOps.default.compact(spark, out2, "k",
+    val out = tmp("cesc") + "/t"
+    val df = (1 to 20).map(i => ("a:b", i.toLong)).toDF("k", "v")
+    val t = fragmentedTable(out, df, "k")
+    val r = TableOps.commitLog.compact(spark, out, "k",
       targetFileBytes = 1L << 30, values = Seq("a:b"))
-    assert(r2("a:b")._1 > 1 && r2("a:b")._2 == 1)
-    assert(spark.read.parquet(out2).count() == 20)
-  }
-
-  test("vacuum: restores orphaned backups first, then clears stale artifacts") {
-    import java.nio.file.{Paths, StandardCopyOption}
-    val out = tmp("vac") + "/t"
-    val df = Seq(("2024-05-01", 1L), ("2024-05-02", 2L)).toDF("dt", "v")
-    Sinks.partitionedParquet(df, out, "dt", force = true)
-    // crash leftovers: day-01's live dir lost mid-swap (only the backup
-    // remains), plus a stale backup AND an abandoned staged dir for day-02
-    Files.move(Paths.get(out, "dt=2024-05-01"),
-      Paths.get(out, ".compact-old-dt=2024-05-01"), StandardCopyOption.ATOMIC_MOVE)
-    Files.createDirectories(Paths.get(out, ".compact-old-dt=2024-05-02"))
-    Files.createDirectories(Paths.get(out, ".compact-staged-dt=2024-05-02"))
-    val (restored, deleted) = graft.operators.TableOps.default.vacuum(out)
-    assert(restored == 1 && deleted == 2)
-    assert(Files.exists(Paths.get(out, "dt=2024-05-01"))) // data back
-    assert(!Files.exists(Paths.get(out, ".compact-old-dt=2024-05-02")))
-    assert(!Files.exists(Paths.get(out, ".compact-staged-dt=2024-05-02")))
-    assert(spark.read.parquet(out).count() == 2)
-    assert(graft.operators.TableOps.default.vacuum(out) == (0, 0)) // idempotent
+    assert(r("a:b")._1 > 1 && r("a:b")._2 == 1)
+    assert(t.read().filter($"k" === "a:b").count() == 20)
   }
 
   test("ndjson.gz sink round-trips and writes gzip files") {
@@ -859,11 +793,15 @@ class StreamingSinksSpec extends AnyFunSuite {
     try {
       FileStreamIngest.runAvailableNowAppend(
         FileStreamIngest.bronzeStream(spark, src, df.schema), out, ckpt)
-      // listener events are async — wait briefly for the progress flush
+      // listener events are async — wait briefly for the progress flush.
+      // Wait for content, not existence: the listener's append creates the
+      // file before it writes the line, and the progress event lands as
+      // the query terminates, so an existence check can read it empty
+      val path = java.nio.file.Paths.get(metrics)
       val deadline = System.currentTimeMillis() + 15000
-      while (!Files.exists(java.nio.file.Paths.get(metrics))
+      while (!(Files.exists(path) && Files.size(path) > 0)
         && System.currentTimeMillis() < deadline) Thread.sleep(100)
-      val lines = Files.readAllLines(java.nio.file.Paths.get(metrics))
+      val lines = Files.readAllLines(path)
       assert(!lines.isEmpty)
       val parsed = spark.read.json(metrics)
       assert(parsed.select(sum($"num_input_rows")).collect()(0).getLong(0) == 3L)
@@ -892,15 +830,15 @@ class StreamingSinksSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getString(1), r.getString(2))).sorted.toSeq
       assert(expected.nonEmpty && expected.map(_._3).distinct.sorted == Seq("holdout", "train"))
       // fragment the write on purpose so compaction has real work
-      Sinks.partitionedParquet(
-        Queries.curate(spark, TestSpark.sfDir).repartition(4), out, "split",
-        force = true)
-      val report = graft.operators.TableOps.default.compact(spark, out, "split",
+      val t = fragmentedTable(out, Queries.curate(spark, TestSpark.sfDir), "split")
+      val report = TableOps.commitLog.compact(spark, out, "split",
         targetFileBytes = 1L << 30, values = Seq("train", "holdout"))
       assert(report("train")._1 > 1 && report("train")._2 == 1)
       assert(report("holdout")._2 == 1)
-      assert(graft.operators.TableOps.default.vacuum(out) == (0, 0)) // clean compact leaves no artifacts
-      val back = spark.read.parquet(out)
+      // the 2-version window still holds the pre-compaction files
+      assert(TableOps.commitLog.vacuum(out) == (0, 0))
+      assert(t.read().inputFiles.length == 2) // one file per split
+      val back = TableOps.commitLog.readTable(spark, out)
         .select("doc_id", "clean", "split").collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2))).sorted.toSeq
       assert(back == expected)
