@@ -15,6 +15,13 @@ import org.apache.spark.sql.types.DecimalType
   *   - W5 `daily_return`: (close - LAG(close,1)) / LAG(close,1)
   * all partitioned by symbol ordered by trade date.
   *
+  * Contract: every column is a TRAILING window (`n PRECEDING .. CURRENT
+  * ROW` or `LAG`), so a row's features depend only on rows at or before it
+  * in window order. `FileStreamIngest.medallionBatch` relies on this to
+  * upsert only the gold rows on or after a batch's first day per key; a
+  * forward-looking column (`LEAD`, a `FOLLOWING` frame) would leave earlier
+  * gold rows silently stale. `GoldFeaturesPrefixSpec` pins the contract.
+  *
   * Numerics: frame sums are accumulated as DECIMAL (exact, association-
   * independent) and only then converted to double, so results are
   * bit-reproducible across partitionings, engines, and retries — floating

@@ -347,14 +347,20 @@ object FileStreamIngest {
     *   - `silver/`     — normalized events, partition-pruned latest-wins
     *     upsert keyed by `event_id`, day-partitioned;
     *   - `gold/`       — the window-feature view ([[graft.operators
-    *     .GoldFeatures]]), INCREMENTALLY maintained: the features are
-    *     backward-looking per-key windows, so a key's gold rows change
-    *     only when that key receives data. Each batch recomputes the
-    *     window chain for the TOUCHED user_ids' full history (read back
-    *     from silver through the binding's `readTable` seam — at 100 TB
-    *     the per-key history is bounded while silver is not) and upserts
-    *     exactly those keys' rows. Late data is thereby handled for
-    *     free: a late row re-derives every downstream feature of its key.
+    *     .GoldFeatures]]), INCREMENTALLY maintained. Every gold column is
+    *     a trailing window over `(ts, event_id)` within `user_id`, so a
+    *     batch row can change gold only on its own day and later days of
+    *     its key. Each batch takes `first_day` = the earliest batch day
+    *     per user_id, recomputes those keys' window chain over their
+    *     silver history (read back through the binding's `readTable`
+    *     seam), and upserts only the rows with `day >= first_day`; the
+    *     pruned merge then rewrites only those day partitions. Exact: a
+    *     row with `day < first_day` precedes every batch row in window
+    *     order (`day = to_date(ts)`), so none of its frames holds a
+    *     changed row, and its DECIMAL frame sums recompute bit-identically
+    *     to the stored value. A late row re-derives every later feature
+    *     of its key; `first_day` comes from the batch, not from what
+    *     silver changed, so a replay rewrites the same gold days.
     *
     * Exactly-once: the streaming checkpoint replays an interrupted batch,
     * and every sink here is a KEYED upsert — quarantine included — so a
@@ -375,10 +381,9 @@ object FileStreamIngest {
     val spark = batch.sparkSession
     val cached = batch.persist()
     // persisted: each upsert helper fires several actions (emptiness
-    // probe, touched-days collect, the write, the merge) — without the
-    // persists the normalize chain and the full gold window chain over
-    // the touched keys' silver history would re-execute per action,
-    // tripling the dominant per-batch work at scale
+    // probe, partition-values collect, the merge) — without the persists
+    // the normalize chain and the gold window chain over the batch keys'
+    // silver history would re-execute per action
     val normalized = Normalize.events(Expectations.enforce(cached, rules)).persist()
     var gold: DataFrame = null
     try {
@@ -406,15 +411,24 @@ object FileStreamIngest {
         val silverDir = s"$outRoot/silver"
         // day rides the merge key (it is a function of ts, so the pair is
         // as unique as event_id alone) — the partition-stability contract
-        // the pruned merge wants
+        // the pruned merge wants. The full row breaks `ts` ties, as in
+        // quarantine: two differing versions of one bar in one batch
+        // then have one winner, whatever the shuffle order
         ops.upsertPartitions(normalized, silverDir,
-          keys = Seq("event_id", "day"), order = Seq(col("ts").desc),
+          keys = Seq("event_id", "day"),
+          order = Seq(col("ts").desc,
+            struct(normalized.columns.map(col).toIndexedSeq: _*)),
           dayCol = "day")
-        val touched = normalized.select("user_id").distinct()
-        val history = ops.readTable(spark, silverDir)
-          .join(broadcast(touched), Seq("user_id"), "left_semi")
+        val firstDay = normalized.groupBy("user_id").agg(min("day").as("first_day"))
+        // the batch symbols' history, each row tagged with its symbol's
+        // first batch day; the select keeps silver's column order (a USING
+        // join moves the key first), so gold's schema does not move
+        val silver = ops.readTable(spark, silverDir)
+        val history = silver.join(broadcast(firstDay), Seq("user_id"))
+          .select((silver.columns :+ "first_day").map(col).toIndexedSeq: _*)
         gold = GoldFeatures.features(history, keyCols = Seq("user_id"),
-          order = Seq(col("ts"), col("event_id")), valueCol = "value").persist()
+            order = Seq(col("ts"), col("event_id")), valueCol = "value")
+          .filter(col("day") >= col("first_day")).drop("first_day").persist()
         ops.upsertPartitions(gold, s"$outRoot/gold",
           keys = Seq("event_id", "day"), order = Seq(col("ts").desc),
           dayCol = "day")

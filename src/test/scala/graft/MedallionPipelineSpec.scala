@@ -62,6 +62,21 @@ class MedallionPipelineSpec extends AnyFunSuite {
 
   private def read(dir: String): DataFrame = TableOps.commitLog.readTable(spark, dir)
 
+  private def sortedRows(df: DataFrame): Seq[String] =
+    df.select(df.columns.sorted.map(col).toIndexedSeq: _*)
+      .collect().map(_.toString).sorted.toSeq
+
+  private def dayStr(d: Int): String = java.time.LocalDate.of(2024, 1, 1).plusDays(d).toString
+
+  /** Daily bars in the prices shape (FIXTURES.md §B: user_id ≙ symbol,
+    * ts ≙ trade date at 20:00 UTC, value ≙ close): one `(symbol, day
+    * offset, close)` each, `event_id` = symbol·1000 + day.
+    */
+  private def bars(rows: Seq[(Long, Int, Double)]): DataFrame =
+    rows.map { case (sym, d, v) => (sym * 1000 + d, s"${dayStr(d)} 20:00:00", sym, "bar", v) }
+      .toDF(rawCols: _*)
+      .withColumn("ts", col("ts").cast("timestamp"))
+
   test("always-on medallion: crash/restart, then exact batch parity for silver/gold/quarantine") {
     val src = tmp("src"); val out = tmp("out"); val ckpt = tmp("ckpt")
     val all = corpus()
@@ -102,14 +117,11 @@ class MedallionPipelineSpec extends AnyFunSuite {
     // checkpoint replay convergence: re-running an already-committed
     // micro-batch (what a crash INSIDE foreachBatch causes on restart)
     // leaves every table unchanged — all sinks are keyed upserts
-    val goldCols = read(s"$out/gold").columns.sorted.toSeq
-    def goldRows() = read(s"$out/gold")
-      .select(goldCols.map(col): _*).collect().map(_.toString).sorted.toSeq
-    val before = goldRows()
+    val before = sortedRows(read(s"$out/gold"))
     val quarCount = quar.count()
     FileStreamIngest.medallionBatch(wave2, out, rules)
     assertSameSet(read(s"$out/silver"), Normalize.events(all))
-    assert(goldRows() == before)
+    assert(sortedRows(read(s"$out/gold")) == before)
     assert(read(s"$out/quarantine").count() == quarCount)
   }
 
@@ -215,5 +227,59 @@ class MedallionPipelineSpec extends AnyFunSuite {
     val hist = graft.tables.CommitLogTable.open(spark, s"$out/gold")
       .history.select("action").as[String].collect().toSeq
     assert(hist == Seq("create", "merge", "merge"))
+  }
+
+  test("incremental gold: a restatement or a late bar rewrites only its own and later days") {
+    val out = tmp("incr")
+    def close(sym: Long, d: Int): Double = (10000 + sym * 700 + d * 37 % 113) / 100.0
+    // symbol 2 has no bar on day 10 until the late bar below lands
+    var current = bars(for (s <- 1L to 3L; d <- 0 until 25 if !(s == 2L && d == 10))
+      yield (s, d, close(s, d)))
+    FileStreamIngest.medallionBatch(current, out, rules)
+    assertSameSet(read(s"$out/gold"), batchGold(current))
+    def goldT = graft.tables.CommitLogTable.open(spark, s"$out/gold")
+
+    def land(batch: DataFrame, sym: Long, firstDay: Int, inserted: Long): Unit = {
+      current = current.join(batch.select("event_id"), Seq("event_id"), "left_anti")
+        .unionByName(batch)
+      val quietDay = dayStr(firstDay - 1)
+      val quietFiles = goldT.readPartitions(Set(quietDay)).inputFiles.sorted.toSeq
+      FileStreamIngest.medallionBatch(batch, out, rules)
+      val gold = read(s"$out/gold")
+      assertSameSet(gold, batchGold(current))
+      // the commit touched the symbol's rows from its first batch day on,
+      // not its whole history
+      val first = to_date(lit(dayStr(firstDay)))
+      val fromFirst = gold.filter($"user_id" === sym && $"day" >= first).count()
+      assert(fromFirst < gold.filter($"user_id" === sym).count())
+      val v = goldT.latestVersion
+      assert(goldT.history.filter($"version" === v)
+        .select("rows_inserted", "rows_updated").as[(Long, Long)].head() ==
+        (inserted, fromFirst - inserted))
+      val images = goldT.readChanges(v, v).filter($"_change_type".startsWith("update_"))
+      assert(!images.isEmpty)
+      assert(images.filter($"day" < first).isEmpty,
+        "gold rows before the batch's first day were rewritten")
+      assert(goldT.readPartitions(Set(quietDay)).inputFiles.sorted.toSeq == quietFiles)
+      // a replay (a crash between the silver and gold commits) converges
+      val before = sortedRows(gold)
+      FileStreamIngest.medallionBatch(batch, out, rules)
+      assert(sortedRows(read(s"$out/gold")) == before)
+    }
+
+    land(bars((22 until 25).map(d => (1L, d, close(1L, d) + 1.5))), sym = 1L,
+      firstDay = 22, inserted = 0)
+    land(bars(Seq((2L, 10, 99.99))), sym = 2L, firstDay = 10, inserted = 1)
+  }
+
+  test("silver winner is deterministic: two versions of one bar with equal ts in one batch") {
+    // event 1003 arrives twice with the same ts and different closes
+    val rows = Seq((1L, 3, 101.25), (1L, 3, 99.5), (1L, 4, 100.0), (2L, 3, 50.0))
+    val outA = tmp("tie-a"); val outB = tmp("tie-b")
+    FileStreamIngest.medallionBatch(bars(rows), outA, rules)
+    FileStreamIngest.medallionBatch(bars(rows.reverse), outB, rules)
+    assert(read(s"$outA/silver").filter($"event_id" === 1003L).count() == 1)
+    assert(sortedRows(read(s"$outA/silver")) == sortedRows(read(s"$outB/silver")))
+    assert(sortedRows(read(s"$outA/gold")) == sortedRows(read(s"$outB/gold")))
   }
 }
