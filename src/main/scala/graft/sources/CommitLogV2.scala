@@ -751,21 +751,10 @@ final class CommitLogScan(spark: SparkSession, table: CommitLogTable,
     statted.map(org.apache.spark.sql.connector.expressions.Expressions.column)
   }
 
-  override def filter(filters: Array[Filter]): Unit = {
-    def keep(f: LogFile, flt: Filter): Boolean = flt match {
-      case sources.In(a, vs) =>
-        vs.length > 10000 ||
-          vs.exists(v => v != null &&
-            table.lazyDeleteMayMatch(snap, f, Some((a, "=", v)))) ||
-          vs.contains(null) // NULL keys can't be refuted by min/max stats
-      case sources.EqualTo(a, v) =>
-        table.lazyDeleteMayMatch(snap, f, Some((a, "=", v)))
-      case sources.And(l, r) => keep(f, l) && keep(f, r)
-      case sources.Or(l, r) => keep(f, l) || keep(f, r)
-      case _ => true // unprovable shapes never prune
-    }
-    prunedFiles = prunedFiles.filter(f => filters.forall(keep(f, _)))
-  }
+  override def filter(filters: Array[Filter]): Unit =
+    prunedFiles = prunedFiles.filter(f => filters.forall(flt =>
+      CommitLogTable.filterMayMatch(flt, (a, op, v) =>
+        table.lazyDeleteMayMatch(snap, f, Some((a, op, v))))))
 
   /** V2 runtime-filter entry point — the one Spark's BatchScanExec
     * actually calls ([[translateRuntimeFilterV2]] emits `IN(col,

@@ -8,6 +8,7 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -157,7 +158,10 @@ final class CommitLogTable private (val spark: SparkSession, val dir: String) {
 
   /** Snapshot read; `version` pins a historical snapshot (time travel).
     * The file list is resolved NOW — the returned frame is isolated from
-    * any later commit. A pinned read FAILS FAST with a clear error if the
+    * any later commit — and is the scan's file index as it stands: no
+    * directory is listed, and a filter on the frame skips every file
+    * whose manifest stats rule it out (a `day = d` filter on a
+    * day-partitioned table scans that day's files only). A pinned read FAILS FAST with a clear error if the
     * version's files were already vacuumed (the alternative is a
     * mid-scan FileNotFoundException from a task, or worse a partial
     * result if the scan raced the sweep) — the reader's half of the
@@ -263,83 +267,6 @@ final class CommitLogTable private (val spark: SparkSession, val dir: String) {
       version: Option[Long] = None): Int =
     rangeFiles(manifest(version.getOrElse(latestVersion)), column, lo, hi).size
 
-  /** Comparable form of a user bound / stored stat under the column's
-    * type: numeric domain (Left) or lexical domain (Right). None = not
-    * convertible → no pruning.
-    */
-  private def statBound(dt: org.apache.spark.sql.types.DataType,
-      v: Any): Option[Either[BigDecimal, String]] = {
-    import org.apache.spark.sql.types._
-    dt match {
-      // a NON-string bound on a string column would prune lexically
-      // ("9.0" vs max "9") while the residual predicate compares after a
-      // numeric cast — only a genuine string bound may prune. (Stored
-      // stats are ASCII-only, and ASCII-vs-anything comparisons agree
-      // between Java's UTF-16 order and Spark/parquet's UTF-8 byte
-      // order, so any string bound is safe here.)
-      case StringType => v match {
-        case s: String => Some(Right(s))
-        case _ => None
-      }
-      case ByteType | ShortType | IntegerType | LongType | FloatType |
-           DoubleType =>
-        // a Float bound must widen THROUGH the double domain the stats
-        // (and Spark's residual comparison) live in: String.valueOf(0.1f)
-        // is "0.1", but the stored stat is the widened 0.10000000149...,
-        // and pruning with the narrower decimal would drop a file whose
-        // min is exactly the bound — silent row loss
-        val canon = v match {
-          case f: java.lang.Float => String.valueOf(f.doubleValue)
-          case other => String.valueOf(other)
-        }
-        try Some(Left(BigDecimal(canon))) catch { case _: NumberFormatException => None }
-      case DateType => v match {
-        case d: java.sql.Date => Some(Left(BigDecimal(d.toLocalDate.toEpochDay)))
-        case s: String =>
-          try Some(Left(BigDecimal(java.time.LocalDate.parse(s).toEpochDay)))
-          catch { case _: java.time.format.DateTimeParseException => None }
-        case n: Number => Some(Left(BigDecimal(n.longValue)))
-        case _ => None
-      }
-      case TimestampType => v match {
-        case t: java.sql.Timestamp =>
-          val i = t.toInstant
-          Some(Left(BigDecimal(i.getEpochSecond) * 1000000 + i.getNano / 1000))
-        case n: Number => Some(Left(BigDecimal(n.longValue)))
-        case _ => None
-      }
-      case _ => None
-    }
-  }
-
-  /** Stored stats are canonical strings: numbers for every non-string
-    * supported type (date days / timestamp micros ride their physical
-    * int), verbatim for strings.
-    */
-  private def statParse(dt: org.apache.spark.sql.types.DataType,
-      s: String): Option[Either[BigDecimal, String]] = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case StringType => Some(Right(s))
-      case _ =>
-        try Some(Left(BigDecimal(s))) catch { case _: NumberFormatException => None }
-    }
-  }
-
-  /** None for mixed domains — a caller must treat "cannot compare" as
-    * "cannot prune".
-    */
-  private def statCompare(a: Either[BigDecimal, String],
-      b: Either[BigDecimal, String]): Option[Int] = (a, b) match {
-    case (Left(x), Left(y)) => Some(x.compare(y))
-    case (Right(x), Right(y)) => Some(x.compareTo(y))
-    case _ => None
-  }
-
-  private def statLte(a: Either[BigDecimal, String],
-      b: Either[BigDecimal, String]): Boolean =
-    statCompare(a, b).forall(_ <= 0)
-
   /** One row per committed version, oldest first: the table's history
     * (action + row/file statistics), from manifests only — no data read.
     */
@@ -388,21 +315,21 @@ final class CommitLogTable private (val spark: SparkSession, val dir: String) {
       col(latest.columnMapping.getOrElse(f.name, f.name)).as(f.name)).toSeq
     // ONE scan over every version's change files — exact named files,
     // never a directory glob (resolveChangeFiles — the object-store-safe
-    // read the manifest's changeFiles enable). `_commit_version` is
+    // read the manifest's changeFiles enable), planned from their names
+    // and sizes alone (ManifestFileIndex: nothing is listed), so a wide
+    // range plans one scan, not one per version. `_commit_version` is
     // stored in-data by post-tag writers; LEGACY files backfill it from
-    // a broadcast change-dir→version map (the streaming source's own
-    // mechanism), so a wide range plans one scan, not one per version.
-    val paths = ms.flatMap(m => resolveChangeFiles(m).map(_.toString))
-    if (paths.isEmpty)
+    // the version of the manifest naming them, which the index attaches
+    // to each file as a constant column — no join, no broadcast.
+    val versioned = ms.flatMap(m => resolveChangeFiles(m).map { case (p, bytes) =>
+      LogFile(p.toString, Seq.empty, rows = 0L, bytes = bytes) -> m.version })
+    if (versioned.isEmpty)
       spark.createDataFrame(new java.util.ArrayList[Row](), sch)
     else {
-      val vmap = spark.createDataFrame(
-        ms.map(m => Row(GPath(m.changesDir.get).fileName, m.version)).asJava,
-        StructType.fromDDL("__chdir STRING, __ver BIGINT"))
-      spark.read.schema(physSch).parquet(paths: _*)
-        .withColumn("__chdir",
-          element_at(split(col("_metadata.file_path"), "/"), -2))
-        .join(broadcast(vmap), Seq("__chdir"), "left")
+      val version = versioned.map { case (f, v) => f.path -> v }.toMap
+      ManifestFileIndex.scan(spark, versioned.map(_._1), f => GPath(f.path),
+        physSch, spark.sessionState.newHadoopConf(),
+        StructType.fromDDL("__ver BIGINT"), f => InternalRow(version(f.path)))
         .withColumn("_commit_version",
           coalesce(col("_commit_version"), col("__ver")))
         .select(logicalCols: _*)
@@ -501,8 +428,7 @@ final class CommitLogTable private (val spark: SparkSession, val dir: String) {
           "than the slowest consumer's lag)")
       return Seq.empty
     }
-    resolveChangeFiles(manifest(version))
-      .map(p => (p.toString, GFiles.size(p)))
+    resolveChangeFiles(manifest(version)).map { case (p, n) => (p.toString, n) }
   }
 
   /** Oldest version whose manifest survives `vacuumLog` — the change
@@ -510,16 +436,16 @@ final class CommitLogTable private (val spark: SparkSession, val dir: String) {
     */
   private[graft] def earliestVersion: Long = listVersions.head
 
-  /** Resolve one committed version's change files to concrete paths.
-    * Manifests that NAME their files (current format) resolve each name
-    * directly — promoted location first, the staged one as fallback —
-    * so the read never depends on directory-listing consistency or the
-    * promotion rename being atomic (mid-"rename" on an object store =
-    * per-object copies; every named file exists whole in at least one
-    * location). Legacy name-less manifests fall back to listing the
-    * promoted dir.
+  /** Resolve one committed version's change files to concrete paths
+    * and their sizes. Manifests that NAME their files (current format)
+    * resolve each name directly — promoted location first, the staged
+    * one as fallback, one status call per location tried — so the read
+    * never depends on directory-listing consistency or the promotion
+    * rename being atomic (mid-"rename" on an object store = per-object
+    * copies; every named file exists whole in at least one location).
+    * Legacy name-less manifests fall back to listing the promoted dir.
     */
-  private def resolveChangeFiles(m: Manifest): Seq[GPath] = m.changesDir match {
+  private def resolveChangeFiles(m: Manifest): Seq[(GPath, Long)] = m.changesDir match {
     case None => Seq.empty
     case Some(sub) =>
       promoteChanges(sub) // local crash repair, idempotent
@@ -529,13 +455,13 @@ final class CommitLogTable private (val spark: SparkSession, val dir: String) {
           GPath(sub).getFileName.toString)
         m.changeFiles.map { name =>
           val p = promoted.resolve(name)
-          if (GFiles.exists(p)) p
-          else {
+          GFiles.sizeIfExists(p).map(p -> _).getOrElse {
             val st = staged.resolve(name)
-            require(GFiles.exists(st),
+            val n = GFiles.sizeIfExists(st)
+            require(n.isDefined,
               s"change file $name of v${m.version} missing at $dir " +
                 "(log-vacuumed change dir, or external deletion)")
-            st
+            st -> n.get
           }
         }
       } else if (!GFiles.isDirectory(promoted)) Seq.empty
@@ -543,6 +469,7 @@ final class CommitLogTable private (val spark: SparkSession, val dir: String) {
         GFiles.list(promoted)
           .filter(_.getFileName.toString.endsWith(".parquet"))
           .sortBy(_.toString)
+          .map(p => p -> GFiles.size(p))
       }
   }
 
@@ -1560,25 +1487,11 @@ final class CommitLogTable private (val spark: SparkSession, val dir: String) {
           lazyDeleteMayMatch(snap, f, Some((name, "=", v))))
       case Some((name, op, v)) =>
         val field = snap.schema.fields.find(_.name.equalsIgnoreCase(name))
-        val result = for {
-          fld <- field
-          (mnS, mxS) <- f.stats.get(
-            snap.columnMapping.getOrElse(fld.name, fld.name))
-          bound <- statBound(fld.dataType, v)
-          mn <- statParse(fld.dataType, mnS)
-          mx <- statParse(fld.dataType, mxS)
-        } yield op match {
-          case "<"  => statCompare(mn, bound).forall(_ < 0)
-          case "<=" => statCompare(mn, bound).forall(_ <= 0)
-          case ">"  => statCompare(mx, bound).forall(_ > 0)
-          case ">=" => statCompare(mx, bound).forall(_ >= 0)
-          case _ => statCompare(mn, bound).forall(_ <= 0) &&
-            statCompare(mx, bound).forall(_ >= 0)
-        }
-        // equality probes additionally consult the file's bloom sidecar
-        // (if indexed): the pruning that works where min/max can't —
-        // point lookups on scattered high-cardinality keys
-        result.getOrElse(true) &&
+        field.forall(fld => statsMayMatch(fld.dataType,
+          f.stats.get(snap.columnMapping.getOrElse(fld.name, fld.name)), op, v)) &&
+          // equality probes additionally consult the file's bloom sidecar
+          // (if indexed): the pruning that works where min/max can't —
+          // point lookups on scattered high-cardinality keys
           (op != "=" || field.forall(fl => bloomMayContain(snap, f, fl, v)))
     }
   }
@@ -2534,15 +2447,17 @@ final class CommitLogTable private (val spark: SparkSession, val dir: String) {
     else StructType(schema.fields.map(f =>
       f.copy(name = mapping.getOrElse(f.name, f.name))))
 
-  /** Explicit-file read: the manifest IS the file index, so no partition
-    * or schema inference ever runs — each path is a leaf parquet file and
-    * the stored schema is authoritative. Files are read under PHYSICAL
-    * column names and surfaced under the manifest's logical names; files
-    * older than a schema evolution lack the newer physical columns and
-    * null-backfill them at scan (the parquet missing-column contract —
-    * what lets evolution skip the 100 TB rewrite). (Partition values live
-    * both in the data columns and in the manifest's per-file metadata;
-    * pruning happens on the manifest, not on directory listings.)
+  /** Explicit-file read: the manifest IS the scan's file index
+    * ([[ManifestFileIndex]]) — each entry becomes a file status from its
+    * path and recorded bytes, so planning lists nothing, infers no
+    * partitions or schema, and launches no job however many files the
+    * read spans. Filters pushed to the scan prune files on the
+    * manifest's per-file min/max stats; Spark still applies them row by
+    * row, so pruning only narrows the scan. Files are read under
+    * PHYSICAL column names and surfaced under the manifest's logical
+    * names; files older than a schema evolution lack the newer physical
+    * columns and null-backfill them at scan (the parquet missing-column
+    * contract — what lets evolution skip the 100 TB rewrite).
     */
   private def readFiles(files: Seq[LogFile], schema: StructType,
       mapping: Map[String, String], applyMarks: Boolean = true): DataFrame =
@@ -2573,34 +2488,36 @@ final class CommitLogTable private (val spark: SparkSession, val dir: String) {
   /** One scan over `fs` surfacing logical names. Columns a file does
     * not physically carry (adopted Hive/Delta layouts —
     * [[CommitLogTable.LogFile.manifestVals]]) attach from the manifest
-    * via a broadcast `_metadata.file_path` lookup: the flagged file's
-    * physical read of such a column is all-NULL (the parquet
-    * missing-column contract), so `coalesce(data, lookup)` is exact —
-    * unflagged files miss the lookup row and keep their physical
-    * values, a flagged file's genuine NULL value stays NULL on both
-    * sides. Filters over an attached column can no longer push to the
-    * parquet reader (the output expression depends on the file path),
-    * which is precisely correct: at the parquet level the column does
-    * not exist, and file-level pruning on the manifest already did the
-    * partition-grain work. Unflagged file sets (every graft-written
-    * table) take the original single-select plan untouched.
+    * as the scan's per-file constants ([[ManifestFileIndex]] partition
+    * values, `__graft_mv_<col>`, NULL for files that carry the column):
+    * the flagged file's physical read of such a column is all-NULL (the
+    * parquet missing-column contract), so `coalesce(data, constant)` is
+    * exact — unflagged files keep their physical values, a flagged
+    * file's genuine NULL value stays NULL on both sides. Filters over an
+    * attached column can no longer push to the parquet reader, which is
+    * precisely correct: at the parquet level the column does not exist,
+    * and file-level pruning on the manifest already did the
+    * partition-grain work.
     */
   private def scanWithManifestVals(fs: Seq[LogFile], schema: StructType,
       mapping: Map[String, String],
       dvFiles: Seq[LogFile] = Seq.empty,
       dvKeepDeleted: Boolean = false): DataFrame = {
-    val flagged = fs.filter(_.manifestVals.nonEmpty)
     val attachCols = schema.fields.map(_.name)
-      .filter(n => flagged.exists(_.manifestVals.contains(n))).toSeq
-    // attached columns may be ABSENT from adopted files' parquet
-    // schemas; a NOT NULL declaration (Delta schemas routinely mark
-    // partition columns so) would make the parquet reader refuse the
-    // file outright ("Required column is missing") — read nullable,
-    // the coalesce below restores the manifest value
-    val readSchema = StructType(schema.fields.map(f =>
-      if (attachCols.contains(f.name)) f.copy(nullable = true) else f))
-    val physRead0 = spark.read.schema(toPhysicalSchema(readSchema, mapping))
-      .parquet(fs.map(f => dataPath(f).toString): _*)
+      .filter(n => fs.exists(_.manifestVals.contains(n))).toSeq
+    // attached columns are ABSENT from adopted files' parquet schemas;
+    // the scan reads every column nullable, so the parquet reader never
+    // refuses such a file over a NOT NULL declaration
+    val hconf = spark.sessionState.newHadoopConf()
+    val physRead0 = ManifestFileIndex.scan(spark, fs, dataPath,
+      toPhysicalSchema(schema, mapping), hconf,
+      StructType(attachCols.map(c => org.apache.spark.sql.types.StructField(
+        s"__graft_mv_$c", org.apache.spark.sql.types.StringType))),
+      f => InternalRow.fromSeq(attachCols.map(c => f.manifestVals.get(c) match {
+        case Some(v) if v != CommitLogTable.HivePartitionNull =>
+          org.apache.spark.unsafe.types.UTF8String.fromString(v)
+        case _ => null
+      })))
     // adopted deletion vectors filter positionally: resolve each file's
     // bitmap once on the driver (O(marked files), the same scope
     // Delta's snapshot holds), broadcast serialized, probe
@@ -2609,7 +2526,6 @@ final class CommitLogTable private (val spark: SparkSession, val dir: String) {
     val physRead =
       if (dvFiles.isEmpty) physRead0
       else {
-        val hconf = spark.sessionState.newHadoopConf()
         val dvMap: Map[String, Array[Byte]] = dvFiles.flatMap(f =>
           f.adoptedDv.map { enc =>
             CommitLogTable.fileMetaPathKey(dataPath(f).toString, hconf) ->
@@ -2621,29 +2537,7 @@ final class CommitLogTable private (val spark: SparkSession, val dir: String) {
           .apply(col("_metadata.file_path"), col("_metadata.row_index"))
         physRead0.where(if (dvKeepDeleted) hit else !hit)
       }
-    val plain = schema.fields.toSeq.map(f =>
-      col(mapping.getOrElse(f.name, f.name)).as(f.name))
-    if (flagged.isEmpty) return physRead.select(plain: _*)
-    val lookupSchema = StructType(
-      org.apache.spark.sql.types.StructField("__graft_fp",
-        org.apache.spark.sql.types.StringType, nullable = false) +:
-      attachCols.map(c => org.apache.spark.sql.types.StructField(
-        s"__graft_mv_$c", org.apache.spark.sql.types.StringType)))
-    val hconf = spark.sessionState.newHadoopConf()
-    val rows = flagged.map { f =>
-      Row.fromSeq(
-        CommitLogTable.fileMetaPathKey(dataPath(f).toString, hconf) +:
-        attachCols.map(c => f.manifestVals.get(c) match {
-          case Some(v) if v != CommitLogTable.HivePartitionNull => v
-          case _ => null
-        }))
-    }
-    val lookup = spark.createDataFrame(
-      new java.util.ArrayList[Row](rows.asJava), lookupSchema)
-    val joined = physRead
-      .withColumn("__graft_fp", col("_metadata.file_path"))
-      .join(broadcast(lookup), Seq("__graft_fp"), "left")
-    joined.select(schema.fields.toSeq.map { f =>
+    physRead.select(schema.fields.toSeq.map { f =>
       val data = col(mapping.getOrElse(f.name, f.name))
       if (attachCols.contains(f.name))
         coalesce(data, col(s"__graft_mv_${f.name}").cast(f.dataType))
@@ -3659,12 +3553,143 @@ object CommitLogTable {
     */
   private[graft] def fileMetaPathKey(abs: String,
       hconf: org.apache.hadoop.conf.Configuration): String = {
-    val p = new org.apache.hadoop.fs.Path(abs)
-    val q = p.getFileSystem(hconf).makeQualified(p).toUri
+    val q = qualifiedPath(abs, hconf).toUri
     new java.net.URI(q.getScheme,
       if (q.getAuthority != null && q.getAuthority.isEmpty) null
       else q.getAuthority,
       q.getPath, null, null).toString
+  }
+
+  /** Comparable form of a user bound / stored stat under the column's
+    * type: numeric domain (Left) or lexical domain (Right). None = not
+    * convertible → no pruning.
+    */
+  private def statBound(dt: org.apache.spark.sql.types.DataType,
+      v: Any): Option[Either[BigDecimal, String]] = {
+    import org.apache.spark.sql.types._
+    dt match {
+      // a NON-string bound on a string column would prune lexically
+      // ("9.0" vs max "9") while the residual predicate compares after a
+      // numeric cast — only a genuine string bound may prune. (Stored
+      // stats are ASCII-only, and ASCII-vs-anything comparisons agree
+      // between Java's UTF-16 order and Spark/parquet's UTF-8 byte
+      // order, so any string bound is safe here.)
+      case StringType => v match {
+        case s: String => Some(Right(s))
+        case _ => None
+      }
+      case ByteType | ShortType | IntegerType | LongType | FloatType |
+           DoubleType =>
+        // a Float bound must widen THROUGH the double domain the stats
+        // (and Spark's residual comparison) live in: String.valueOf(0.1f)
+        // is "0.1", but the stored stat is the widened 0.10000000149...,
+        // and pruning with the narrower decimal would drop a file whose
+        // min is exactly the bound — silent row loss
+        val canon = v match {
+          case f: java.lang.Float => String.valueOf(f.doubleValue)
+          case other => String.valueOf(other)
+        }
+        try Some(Left(BigDecimal(canon))) catch { case _: NumberFormatException => None }
+      case DateType => v match {
+        case d: java.sql.Date => Some(Left(BigDecimal(d.toLocalDate.toEpochDay)))
+        case s: String =>
+          try Some(Left(BigDecimal(java.time.LocalDate.parse(s).toEpochDay)))
+          catch { case _: java.time.format.DateTimeParseException => None }
+        case n: Number => Some(Left(BigDecimal(n.longValue)))
+        case _ => None
+      }
+      case TimestampType => v match {
+        case t: java.sql.Timestamp =>
+          val i = t.toInstant
+          Some(Left(BigDecimal(i.getEpochSecond) * 1000000 + i.getNano / 1000))
+        case n: Number => Some(Left(BigDecimal(n.longValue)))
+        case _ => None
+      }
+      case _ => None
+    }
+  }
+
+  /** Stored stats are canonical strings: numbers for every non-string
+    * supported type (date days / timestamp micros ride their physical
+    * int), verbatim for strings.
+    */
+  private def statParse(dt: org.apache.spark.sql.types.DataType,
+      s: String): Option[Either[BigDecimal, String]] = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case StringType => Some(Right(s))
+      case _ =>
+        try Some(Left(BigDecimal(s))) catch { case _: NumberFormatException => None }
+    }
+  }
+
+  /** None for mixed domains — a caller must treat "cannot compare" as
+    * "cannot prune".
+    */
+  private def statCompare(a: Either[BigDecimal, String],
+      b: Either[BigDecimal, String]): Option[Int] = (a, b) match {
+    case (Left(x), Left(y)) => Some(x.compare(y))
+    case (Right(x), Right(y)) => Some(x.compareTo(y))
+    case _ => None
+  }
+
+  private def statLte(a: Either[BigDecimal, String],
+      b: Either[BigDecimal, String]): Boolean =
+    statCompare(a, b).forall(_ <= 0)
+
+  /** The min/max half of [[CommitLogTable.lazyDeleteMayMatch]]: can a
+    * file whose stat for the column is `stat` hold a row with
+    * `column <op> v` (op ∈ <, <=, >, >=, =)? TRUE unless the stat
+    * disproves it; a missing stat, an unconvertible bound or a mixed
+    * comparison domain is conservatively a match.
+    */
+  private[graft] def statsMayMatch(dt: org.apache.spark.sql.types.DataType,
+      stat: Option[(String, String)], op: String, v: Any): Boolean =
+    (for {
+      (mnS, mxS) <- stat
+      bound <- statBound(dt, v)
+      mn <- statParse(dt, mnS)
+      mx <- statParse(dt, mxS)
+    } yield op match {
+      case "<"  => statCompare(mn, bound).forall(_ < 0)
+      case "<=" => statCompare(mn, bound).forall(_ <= 0)
+      case ">"  => statCompare(mx, bound).forall(_ > 0)
+      case ">=" => statCompare(mx, bound).forall(_ >= 0)
+      case _ => statCompare(mn, bound).forall(_ <= 0) &&
+        statCompare(mx, bound).forall(_ >= 0)
+    }).getOrElse(true)
+
+  /** May a file hold a row passing `flt`, given a per-comparison prover
+    * `leaf(column, op, value)`? Walks AND / OR / IN over the five
+    * comparisons; every other shape (NOT, IS NULL, string matches …)
+    * proves nothing and keeps the file. An IN keeps the file if any
+    * member may match or a member is NULL; sets over 10k values skip
+    * pruning rather than pay O(files × values) driver arithmetic.
+    */
+  private[graft] def filterMayMatch(flt: org.apache.spark.sql.sources.Filter,
+      leaf: (String, String, Any) => Boolean): Boolean = {
+    import org.apache.spark.sql.sources._
+    flt match {
+      case EqualTo(a, v) => leaf(a, "=", v)
+      case LessThan(a, v) => leaf(a, "<", v)
+      case LessThanOrEqual(a, v) => leaf(a, "<=", v)
+      case GreaterThan(a, v) => leaf(a, ">", v)
+      case GreaterThanOrEqual(a, v) => leaf(a, ">=", v)
+      case In(a, vs) =>
+        vs.length > 10000 || vs.contains(null) || vs.exists(leaf(a, "=", _))
+      case And(l, r) => filterMayMatch(l, leaf) && filterMayMatch(r, leaf)
+      case Or(l, r) => filterMayMatch(l, leaf) || filterMayMatch(r, leaf)
+      case _ => true
+    }
+  }
+
+  /** `abs` qualified by its filesystem — the path a listing of the file
+    * reports (and [[fileMetaPathKey]] renders).
+    */
+  private[graft] def qualifiedPath(abs: String,
+      hconf: org.apache.hadoop.conf.Configuration): org.apache.hadoop.fs.Path = {
+    val p = new org.apache.hadoop.fs.Path(abs)
+    p.getFileSystem(hconf).makeQualified(p)
   }
 
   /** A manifest value string in its column's INTERNAL Catalyst form

@@ -742,6 +742,12 @@ object GFiles {
   def isDirectory(p: GPath): Boolean = Store.of(p).isDirectory(p)
   def isRegularFile(p: GPath): Boolean = Store.of(p).isRegularFile(p)
   def size(p: GPath): Long = Store.of(p).size(p)
+  /** [[size]], or None when `p` does not exist — one status call. */
+  def sizeIfExists(p: GPath): Option[Long] =
+    try Some(size(p)) catch {
+      case _: java.nio.file.NoSuchFileException |
+           _: java.io.FileNotFoundException => None
+    }
   def lastModifiedMillis(p: GPath): Long = Store.of(p).lastModifiedMillis(p)
   def readAllBytes(p: GPath): Array[Byte] = Store.of(p).readAllBytes(p)
   def readString(p: GPath): String = new String(readAllBytes(p), UTF_8)
