@@ -22,6 +22,14 @@ import org.apache.spark.sql.SparkSession
   *    [[graft.sources.Catalog.registerParquet]]) into logical-plan stats,
   *    so sizing decisions (IVF centroid counts) read metadata instead of
   *    paying a count job per query.
+  *  - status-store retention capped (`sql.ui.retainedExecutions` 50,
+  *    `ui.retainedJobs`/`ui.retainedStages` 100,
+  *    `ui.dagGraph.retainedRootRDDs` 100): with the UI off the status and
+  *    SQL-UI stores still keep every execution, job, stage, task and RDD
+  *    graph up to the 1,000 defaults (root RDDs: unbounded), so a
+  *    long-running pipeline's driver heap climbs with every medallion
+  *    wave for hours. Nothing in this engine reads those stores;
+  *    listeners see every event whatever the retention.
   */
 object Sessions {
   def build(master: String, cores: Int, appName: String = "graft"): SparkSession =
@@ -57,5 +65,9 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.cbo.planStats.enabled", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.ui.retainedExecutions", "50")
+      .config("spark.ui.retainedJobs", "100")
+      .config("spark.ui.retainedStages", "100")
+      .config("spark.ui.dagGraph.retainedRootRDDs", "100")
       .getOrCreate()
 }

@@ -189,8 +189,7 @@ object Bm25 {
     // corpus stats RIDE the postings job as observed metrics (a zero-pass
     // accumulator above the tf filter) — the former separate stats
     // aggregate re-tokenized the whole corpus a second time
-    val obs = org.apache.spark.sql.Observation()
-    val base = tokenized(docs, idCol, textCol).observe(obs,
+    val (base, stats) = graft.Observed(tokenized(docs, idCol, textCol),
       count(lit(1)).as("n"),
       sum(size(col("__toks"))).cast("long").as("total"))
     // in-row tf: the postings build pays ONE shuffle (the term_bucket
@@ -202,14 +201,11 @@ object Bm25 {
     postings.repartition(col("term_bucket"))
       .write.partitionBy("term_bucket")
       .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$dir/postings")
-    val row = obs.get
-    val total = row.get("total") match {
-      case Some(l: Long) => lit(l) // sum over zero rows observes NULL
-      case _ => lit(null)
-    }
+    val row = stats.await(s"bm25 index write at $dir")
+    // sum over zero rows observes NULL
+    val total = if (row.isNullAt(1)) lit(null) else lit(row.getLong(1))
     docs.sparkSession.range(1)
-      .select(lit(row.get("n").collect { case l: Long => l }.getOrElse(0L))
-        .cast("long").as("__n"), total.cast("long").as("__total"))
+      .select(lit(row.getLong(0)).as("__n"), total.cast("long").as("__total"))
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$dir/stats")
   }

@@ -443,7 +443,10 @@ object FileStreamIngest {
   /** Always-on medallion: [[medallionBatch]] on a `ProcessingTime`
     * cadence — the reference's scheduled notebooks as ONE running
     * pipeline. Returns the running query (caller owns stop); restarts
-    * resume exactly-once from the shared checkpoint.
+    * resume exactly-once from the shared checkpoint. The scheduled-drain
+    * form is `runAvailableNowForeachBatch(df, checkpointDir)(
+    * medallionBatch(_, outRoot, rules, ops))` on the same checkpoint —
+    * flip between the two freely.
     */
   def runProcessingTimeMedallion(df: DataFrame, outRoot: String,
       checkpointDir: String,
@@ -458,14 +461,4 @@ object FileStreamIngest {
         medallionBatch(batch, outRoot, rules, ops)
       }
       .start()
-
-  /** Scheduled-drain medallion (Trigger.AvailableNow), sharing the
-    * checkpoint — flip between this and the always-on form freely.
-    */
-  def runAvailableNowMedallion(df: DataFrame, outRoot: String,
-      checkpointDir: String,
-      rules: Seq[graft.operators.Expectations.Expectation],
-      ops: TableOps = TableOps.commitLog): Unit =
-    runAvailableNowForeachBatch(df, checkpointDir)(
-      medallionBatch(_, outRoot, rules, ops))
 }

@@ -520,16 +520,11 @@ final class CommitLogTable private (val spark: SparkSession, val dir: String) {
       // deterministic — the same assumption Spark's own task retries
       // already impose on the data write itself (a retried write task
       // re-executes its `aligned` partition).
-      val ((newFiles, dataRows, sub), changesSubOpt) =
-        if (recordChanges) {
-          val (d, c) = writeDataAndChanges(
-            () => writeData(aligned, snap.partitionCols, mapping2),
-            () => writeChanges(
-              aligned.withColumn("_change_type", lit("insert")),
-              snap.version + 1, mapping2))
-          (d, Some(c))
-        } else (writeData(aligned, snap.partitionCols, mapping2),
-          None: Option[String])
+      val ((newFiles, dataRows, sub), changesSub) = writeDataAndChanges(
+        () => writeData(aligned, snap.partitionCols, mapping2),
+        Option.when(recordChanges)(() => writeChanges(
+          aligned.withColumn("_change_type", lit("insert")),
+          snap.version + 1, mapping2)))
       // idle-stream guard, detected POST-write (costs no extra action —
       // an isEmpty pre-probe would re-execute the batch pipeline): an
       // empty batch must not publish a version, or a scheduled append
@@ -544,11 +539,10 @@ final class CommitLogTable private (val spark: SparkSession, val dir: String) {
       if (dataRows == 0 && schemaSig(schema2) == schemaSig(snap.schema)
           && txn.isEmpty) {
         deleteRecursively(GPath(dir, sub))
-        changesSubOpt.foreach(cs => deleteRecursively(GPath(dir,
+        changesSub.foreach(cs => deleteRecursively(GPath(dir,
           StagedChangesDirName, GPath(cs).getFileName.toString)))
         throw NoOpCommit
       }
-      val changesSub = changesSubOpt
       mkManifest(snap, "append", snap.files ++ newFiles,
         rowsInserted = dataRows, rowsUpdated = 0, rowsDeleted = 0,
         rowsTotal = snap.rowsTotal + dataRows, changesDir = changesSub,
@@ -762,79 +756,25 @@ final class CommitLogTable private (val spark: SparkSession, val dir: String) {
       val t = target.withColumn("__t", lit(true)).as("t")
       val u = latest.withColumn("__u", lit(true)).as("u")
       val joinCond = keys.map(k => col(s"t.$k") === col(s"u.$k")).reduce(_ && _)
-      // ONE shuffle produces snapshot + change set + counts: persist the
+      // ONE shuffle produces the snapshot and the change set: persist the
       // joined frame, release after the commit's writes are on disk
       val joined = t.join(u, joinCond, "full_outer").persist()
       try {
         val uP = col("u.__u").isNotNull
         val tP = col("t.__t").isNotNull
-        val valueCols = schema2.fieldNames.filterNot(keys.contains)
-        val picks = keys.map(k => when(uP, col(s"u.$k")).otherwise(col(s"t.$k")).as(k)) ++
-          valueCols.map(c => when(uP, col(s"u.$c")).otherwise(col(s"t.$c")).as(c))
-        def side(s0: String) =
-          schema2.fieldNames.map(c => col(s"$s0.$c").as(c)).toSeq
-        def metricOf(o: org.apache.spark.sql.Observation, name: String): Long =
-          o.get.get(name) match {
-            case Some(l: Long) => l
-            case _ => 0L // sum over zero rows observes NULL
-          }
-        val (ins, upd, newFiles, changesSubOpt) =
-          if (recordChanges) {
-            val changes =
-              joined.filter(uP && !tP).select(side("u"): _*)
-                .withColumn("_change_type", lit("insert"))
-              .unionByName(joined.filter(uP && tP).select(side("t"): _*)
-                .withColumn("_change_type", lit("update_preimage")))
-              .unionByName(joined.filter(uP && tP).select(side("u"): _*)
-                .withColumn("_change_type", lit("update_postimage")))
-              .unionByName(nullRows.withColumn("_change_type", lit("insert")))
-            // insert/update counts ride the change write as observed
-            // metrics (CollectMetrics is a zero-pass accumulator inside
-            // the job), and the snapshot write and change write are
-            // INDEPENDENT consumers of the persisted join — run them
-            // concurrently so the commit pays one write wall-time, not
-            // two plus a third counting pass (guide §2.6 / §1.2)
-            val obs = org.apache.spark.sql.Observation()
-            val observed = changes.observe(obs,
-              sum(when(col("_change_type") === "insert", 1L).otherwise(0L))
-                .as("ins"),
-              sum(when(col("_change_type") === "update_preimage", 1L)
-                .otherwise(0L)).as("upd"))
-            val ((nf, _, _), changesSub) = writeDataAndChanges(
-              () => writeData(joined.select(picks: _*)
-                .unionByName(nullRows), snap.partitionCols, mapping2),
-              () => writeChanges(observed, snap.version + 1, mapping2))
-            (metricOf(obs, "ins"), metricOf(obs, "upd"), nf, Some(changesSub))
-          } else {
-            // recordChanges=false (a table whose change feed nothing
-            // reads — Delta's CDF-off default): skip the change-set write
-            // entirely; the pricing metrics ride the snapshot write.
-            // ONE observe at the union's ROOT: a CollectMetrics nested
-            // INSIDE a union branch is pruned by AQE empty-relation
-            // propagation when that branch is empty at runtime (the
-            // null-keyed side usually is) and Observation.get then
-            // blocks forever. The union root is provably non-empty here
-            // (the NoOpCommit probe above), so the root node always runs.
-            val obs = org.apache.spark.sql.Observation()
-            val marked = joined.select((picks :+ (uP && !tP).as("__ins")
-                :+ (uP && tP).as("__upd")): _*)
-              .unionByName(nullRows
-                .withColumn("__ins", lit(true))
-                .withColumn("__upd", lit(false)))
-            val snapIn = marked.observe(obs,
-                sum(when(col("__ins"), 1L).otherwise(0L)).as("ins"),
-                sum(when(col("__upd"), 1L).otherwise(0L)).as("upd"))
-              .drop("__ins", "__upd")
-            val (nf, _, _) = writeData(snapIn, snap.partitionCols, mapping2)
-            (metricOf(obs, "ins"), metricOf(obs, "upd"), nf, None)
-          }
-        mkManifest(snap, "merge", untouched ++ newFiles,
-          rowsInserted = ins, rowsUpdated = upd, rowsDeleted = 0,
-          rowsTotal = snap.rowsTotal - affected.map(_.rows).sum +
-            newFiles.map(_.rows).sum,
-          changesDir = changesSubOpt,
-          schema = schema2, columnMapping = mapping2,
-          properties = identitySyncProps(snap, mapping2, newFiles).orNull)
+        // the update side wins every row it is on; a row only the target
+        // holds is kept unchanged (tag NULL)
+        val picked = joined.select(schema2.fieldNames.map(c =>
+            when(uP, col(s"u.$c")).otherwise(col(s"t.$c")).as(c)).toSeq :+
+          when(uP && tP, lit("update_postimage")).when(uP, lit("insert"))
+            .as("_change_type"): _*)
+        val preimages = joined.filter(uP && tP)
+          .select(schema2.fieldNames.map(c => col(s"t.$c").as(c)).toSeq: _*)
+        rewrite(snap, "merge", affected, untouched,
+          picked
+            .unionByName(preimages.withColumn("_change_type", lit("update_preimage")))
+            .unionByName(nullRows.withColumn("_change_type", lit("insert"))),
+          recordChanges, schema2, mapping2)
       } finally joined.unpersist(false)
       } finally { latest.unpersist(false); nullRows.unpersist(false) }
     }
@@ -1004,8 +944,8 @@ final class CommitLogTable private (val spark: SparkSession, val dir: String) {
 
           val targetOnly = joined.filter(tP && !sP)
           val sourceOnly = joined.filter(!tP && sP)
-          // boolean shorthands for counts/CDF: does SOME update (resp.
-          // delete) clause win for this row?
+          // boolean shorthands for the change images: does SOME update
+          // (resp. delete) clause win for this row?
           def idxIn(idx: Column, is: Seq[Int]): Column =
             is.map(i => idx === i).reduceOption(_ || _).getOrElse(lit(false))
           val mUpdIs = matched.zipWithIndex.collect { case (_: MatchedUpdate, i) => i }
@@ -1014,24 +954,21 @@ final class CommitLogTable private (val spark: SparkSession, val dir: String) {
           val bDelIs = bySource.zipWithIndex.collect { case (_: BySourceDelete, i) => i }
           val insHit = iIdx >= 0
 
-          // ONE pass over the persisted join prices the whole commit and
-          // gates the no-op exit BEFORE anything is written. All five
-          // columns are plain conditional sums — round 18 folded the
-          // cardinality guard in as a count_distinct mixed with the sums,
-          // which Spark plans via Expand (every join row duplicated
-          // through the aggregate; q_table_merge_sql 3.8 -> 6.1 s), so
-          // the guard is a separate cheap pass below instead.
+          // ONE pass over the persisted join gates the commit BEFORE
+          // anything is written: does any clause take effect (else it is a
+          // no-op), and does any matched update/delete fire (else the
+          // cardinality guard is skipped). Both are plain conditional
+          // sums — round 18 folded the guard in as a count_distinct, which
+          // Spark plans via Expand (every join row duplicated through the
+          // aggregate; q_table_merge_sql 3.8 -> 6.1 s), so the guard is a
+          // separate cheap pass below instead. The commit's own counts
+          // are priced by the rewrite.
           val firing = tP && sP && mIdx >= 0
           val cRow = joined.agg(
-            sum(when(!tP && sP && insHit, 1L).otherwise(0L)),
-            sum(when(tP && sP && idxIn(mIdx, mUpdIs), 1L).otherwise(0L)) +
-              sum(when(tP && !sP && idxIn(bIdx, bUpdIs), 1L).otherwise(0L)),
-            sum(when(tP && sP && idxIn(mIdx, mDelIs), 1L).otherwise(0L)) +
-              sum(when(tP && !sP && idxIn(bIdx, bDelIs), 1L).otherwise(0L)),
+            sum(when(firing || (!tP && sP && insHit) || (tP && !sP && bIdx >= 0),
+              1L).otherwise(0L)),
             sum(when(firing, 1L).otherwise(0L))).head()
-          val (ins, upd, del) =
-            (zeroIfNull(cRow, 0), zeroIfNull(cRow, 1), zeroIfNull(cRow, 2))
-          if (matched.nonEmpty && zeroIfNull(cRow, 3) > 0) {
+          if (matched.nonEmpty && zeroIfNull(cRow, 1) > 0) {
             // ANSI/Delta cardinality guard: a target row may pair with
             // multiple source rows ONLY if at most one pair makes an
             // update/delete clause fire. Grouped count over the FIRING
@@ -1046,7 +983,7 @@ final class CommitLogTable private (val spark: SparkSession, val dir: String) {
                 "with an applying update/delete clause — make the ON " +
                 "condition or clause conditions selective enough")
           }
-          if (ins + upd + del == 0) throw NoOpCommit
+          if (zeroIfNull(cRow, 0) == 0) throw NoOpCommit
 
           // generated columns RECOMPUTE on every update output (a SET on
           // a base column changes them; direct SETs were refused above)
@@ -1078,52 +1015,25 @@ final class CommitLogTable private (val spark: SparkSession, val dir: String) {
               col("t.__graft_rid") === col("__graft_ar"), "left_anti")
             .select(col("t.__graft_rid").as("__graft_rid") +: tOut: _*)
             .dropDuplicates("__graft_rid").drop("__graft_rid")
-          val keptAll = (matchedUnchanged +:
-            (targetOnly.filter(bIdx === -1).select(tOut: _*) +:
-              (matchedUpdated ++ bySourceUpdated ++ inserted)))
-            .reduce(_ unionByName _)
-          // insert-only: unchanged target rows carry in their original
-          // files — only the inserts are written
-          val kept =
-            if (insertOnly)
-              inserted.reduceOption(_ unionByName _)
-                .getOrElse(keptAll.limit(0))
-            else keptAll
-
-          val postImages = (matchedUpdated ++ bySourceUpdated)
-            .reduceOption(_ unionByName _)
-          val changed = (postImages.toSeq ++
-            inserted.reduceOption(_ unionByName _).toSeq)
-            .reduceOption(_ unionByName _)
-          changed.foreach(enforceConstraints(snap, _, "merge"))
+          val postImages = matchedUpdated ++ bySourceUpdated
+          (postImages ++ inserted).reduceOption(_ unionByName _)
+            .foreach(enforceConstraints(snap, _, "merge"))
 
           val preImages = pairs.filter(idxIn(mIdx, mUpdIs)).select(tOut: _*)
             .unionByName(targetOnly.filter(idxIn(bIdx, bUpdIs)).select(tOut: _*))
           val deleted = pairs.filter(idxIn(mIdx, mDelIs)).select(tOut: _*)
             .unionByName(targetOnly.filter(idxIn(bIdx, bDelIs)).select(tOut: _*))
-          val ct = "_change_type"
-          val changes = inserted.reduceOption(_ unionByName _)
-            .map(_.withColumn(ct, lit("insert")))
-            .toSeq ++
-            Seq(preImages.withColumn(ct, lit("update_preimage")),
-              deleted.withColumn(ct, lit("delete"))) ++
-            postImages.map(_.withColumn(ct, lit("update_postimage"))).toSeq
-          val allChanges = changes.reduce(_ unionByName _)
-
-          // the snapshot write and the change write are independent
-          // consumers of the persisted join — overlap them (same
-          // rationale as merge())
-          val ((newFiles, _, _), changesSub) = writeDataAndChanges(
-            () => writeData(kept, snap.partitionCols, snap.columnMapping),
-            () => writeChanges(allChanges, snap.version + 1,
-              snap.columnMapping))
-          mkManifest(snap, "merge", untouched ++ newFiles,
-            rowsInserted = ins, rowsUpdated = upd, rowsDeleted = del,
-            rowsTotal = snap.rowsTotal - rewritten.map(_.rows).sum +
-              newFiles.map(_.rows).sum,
-            changesDir = Some(changesSub),
-            properties =
-              identitySyncProps(snap, snap.columnMapping, newFiles).orNull)
+          // insert-only: unchanged target rows carry in their original
+          // files — only the inserts are written
+          val unchanged = if (insertOnly) Nil
+            else Seq(matchedUnchanged, targetOnly.filter(bIdx === -1).select(tOut: _*))
+          def tag(fs: Seq[DataFrame], t: Column) = fs.map(_.withColumn("_change_type", t))
+          rewrite(snap, "merge", rewritten, untouched,
+            (tag(unchanged, lit(null).cast("string")) ++
+              tag(postImages, lit("update_postimage")) ++
+              tag(inserted, lit("insert")) ++
+              tag(Seq(preImages), lit("update_preimage")) ++
+              tag(Seq(deleted), lit("delete"))).reduce(_ unionByName _))
         } finally joined.unpersist(false)
       } finally src.unpersist(false)
     }
@@ -1212,60 +1122,15 @@ final class CommitLogTable private (val spark: SparkSession, val dir: String) {
         require(id.allowExplicit || !set.contains(id.col),
           s"update: cannot SET identity column '${id.col}' (GENERATED " +
             "ALWAYS AS IDENTITY)") }
-      // stats pruning (same prover as deleteLazy): files whose (min, max)
-      // PROVE no row matches carry over BY REFERENCE, marks and all — a
-      // one-partition-selective UPDATE on a clustered 100 TB table
-      // rewrites that partition's files, not the table
-      val parsed = parseSimpleComparisonExpr(
-        org.apache.spark.sql.graftbridge.toCatalystExpression(predicate))
-      val (mayMatch, carried) =
-        snap.files.partition(f => lazyDeleteMayMatch(snap, f, parsed))
-      if (mayMatch.isEmpty) throw NoOpCommit // provably nothing to update
-      val current = readFiles(mayMatch, snap.schema, snap.columnMapping).persist()
-      val hits = coalesce(predicate, lit(false))
-      try {
-        val updatedRows = recomputeGenerated(current.filter(hits).select(
+      rewriteMatching(snap, "update", predicate) { hits =>
+        val updatedRows = recomputeGenerated(hits.select(
           snap.schema.fieldNames.map(c =>
             set.get(c).map(_.cast(snap.schema(c).dataType).as(c))
               .getOrElse(col(c))).toSeq: _*), snap)
         enforceConstraints(snap, updatedRows, "update")
-        // the matched-row count rides the change write as an observed
-        // metric, and the two writes are independent consumers of the
-        // persisted slice — overlap them (same shape as merge())
-        val obs = org.apache.spark.sql.Observation()
-        val changes = current.filter(hits)
-          .withColumn("_change_type", lit("update_preimage"))
-          .unionByName(updatedRows
-            .withColumn("_change_type", lit("update_postimage")))
-          .observe(obs, sum(when(col("_change_type") === "update_preimage",
-            1L).otherwise(0L)).as("upd"))
-        val ((newFiles, _, updSub), changesSub) = writeDataAndChanges(
-          () => writeData(current.filter(!hits).unionByName(updatedRows),
-            snap.partitionCols, snap.columnMapping),
-          () => writeChanges(changes, snap.version + 1, snap.columnMapping))
-        val nUpd = obs.get.get("upd") match {
-          case Some(l: Long) => l
-          case _ => 0L // sum over zero rows observes NULL
-        }
-        if (nUpd == 0) {
-          // nothing matched: drop this attempt's output, publish nothing
-          deleteRecursively(GPath(dir, updSub))
-          deleteRecursively(GPath(dir, StagedChangesDirName,
-            GPath(changesSub).getFileName.toString))
-          throw NoOpCommit
-        }
-        // bookkeeping is footer truth on the rewritten slice: the rewrite
-        // materializes any lazy-delete marks ON THE FILES IT TOUCHES
-        // (`current` reads through them); carried files keep their
-        // physical counts (and their marks) unchanged
-        mkManifest(snap, "update", carried ++ newFiles,
-          rowsInserted = 0, rowsUpdated = nUpd, rowsDeleted = 0,
-          rowsTotal = snap.rowsTotal - mayMatch.map(_.rows).sum +
-            newFiles.map(_.rows).sum,
-          changesDir = Some(changesSub),
-          properties =
-            identitySyncProps(snap, snap.columnMapping, newFiles).orNull)
-      } finally current.unpersist(false)
+        hits.withColumn("_change_type", lit("update_preimage"))
+          .unionByName(updatedRows.withColumn("_change_type", lit("update_postimage")))
+      }
     }
   }
 
@@ -1282,50 +1147,99 @@ final class CommitLogTable private (val spark: SparkSession, val dir: String) {
     * predicate shapes fall back to the full rewrite.
     */
   def delete(predicate: Column): Long = retryCommit("delete") { snap =>
+    rewriteMatching(snap, "delete", predicate)(
+      _.withColumn("_change_type", lit("delete")))
+  }
+
+  /** The stats-pruned copy-on-write that [[update]] and [[delete]]
+    * share: files whose (min, max) PROVE no row matches `predicate`
+    * (the [[deleteLazy]] prover) carry over BY REFERENCE, marks and all —
+    * a one-partition-selective DML on a clustered 100 TB table rewrites
+    * that partition's files, not the table. The rest are read once
+    * (persisted; the read goes through their lazy-delete marks, so the
+    * rewrite materializes them) and split on the predicate under SQL
+    * semantics (NULL = no match): the rows it misses are kept unchanged,
+    * and `tagHits` turns the rows it hits into tagged [[rewrite]] rows.
+    * A provably-empty file set, or a predicate nothing satisfies,
+    * publishes nothing.
+    */
+  private def rewriteMatching(snap: Manifest, action: String,
+      predicate: Column)(tagHits: DataFrame => DataFrame): Manifest = {
     val parsed = parseSimpleComparisonExpr(
-        org.apache.spark.sql.graftbridge.toCatalystExpression(predicate))
+      org.apache.spark.sql.graftbridge.toCatalystExpression(predicate))
     val (mayMatch, carried) =
       snap.files.partition(f => lazyDeleteMayMatch(snap, f, parsed))
-    if (mayMatch.isEmpty) throw NoOpCommit // provably nothing to delete
+    if (mayMatch.isEmpty) throw NoOpCommit
     val current = readFiles(mayMatch, snap.schema, snap.columnMapping).persist()
-    val goes = coalesce(predicate, lit(false))
-    try {
-      // rows_deleted = the PREDICATE's count (what the CDF records) —
-      // NOT a before/after file diff, which would also fold in any lazy
-      // deletes this rewrite happens to materialize (`current` reads
-      // through the marks on the files it rewrites) and report phantom
-      // deletions against the change feed; rowsTotal stays footer truth:
-      // carried files keep their physical counts, rewritten files
-      // contribute theirs. The count rides the change write as an
-      // observed metric and the two writes overlap (same as merge()).
-      val obs = org.apache.spark.sql.Observation()
-      val changes = current.filter(goes)
-        .withColumn("_change_type", lit("delete"))
-        .observe(obs, count(lit(1)).as("del"))
-      val ((newFiles, _, delSub), changesSub) = writeDataAndChanges(
-        () => writeData(current.filter(!goes),
-          snap.partitionCols, snap.columnMapping),
-        () => writeChanges(changes, snap.version + 1, snap.columnMapping))
-      val nDel = obs.get.get("del") match {
-        case Some(l: Long) => l
-        case _ => 0L
-      }
-      if (nDel == 0) {
-        // nothing matched: a scheduled delete loop must not pay a
-        // rewrite per idle run, grow the log, or tick the vacuum
-        // retention window (same guard as update())
-        deleteRecursively(GPath(dir, delSub))
-        deleteRecursively(GPath(dir, StagedChangesDirName,
-          GPath(changesSub).getFileName.toString))
-        throw NoOpCommit
-      }
-      mkManifest(snap, "delete", carried ++ newFiles,
-        rowsInserted = 0, rowsUpdated = 0,
-        rowsDeleted = nDel,
-        rowsTotal = snap.rowsTotal - mayMatch.map(_.rows).sum +
-          newFiles.map(_.rows).sum,
-        changesDir = Some(changesSub))
-    } finally current.unpersist(false)
+    val hits = coalesce(predicate, lit(false))
+    try rewrite(snap, action, mayMatch, carried,
+      current.filter(!hits).withColumn("_change_type", lit(null).cast("string"))
+        .unionByName(tagHits(current.filter(hits))))
+    finally current.unpersist(false)
+  }
+
+  /** The one copy-on-write commit every DML ([[merge]], [[mergeInto]],
+    * [[update]], [[delete]]) publishes through. The caller says what
+    * changes and nothing else: the files the commit `replaced`, the
+    * files it `carried` by reference, and ONE frame `out` in the
+    * commit's logical schema plus a `_change_type` tag per row:
+    *   - NULL: a row kept unchanged inside a replaced file;
+    *   - `insert`, `update_postimage`: a row version the commit adds;
+    *   - `update_preimage`, `delete`: a row version the commit retires.
+    * The new files hold the NULL, `insert` and `update_postimage` rows;
+    * the change set holds every tagged row. Both are written
+    * concurrently ([[writeDataAndChanges]]); `recordChanges = false`
+    * (a keyed merge whose feed nothing reads) writes the data alone.
+    *
+    * Pricing is ONE observation ([[graft.Observed]]) at the root of the
+    * written frame that carries the tags — the change set, or the data
+    * when there is none: `rows_inserted` = #`insert`, `rows_updated` =
+    * #`update_postimage`, `rows_deleted` = #`delete`. Updates count
+    * postimages, not preimages: each updated row has one of each in the
+    * change set, but only the postimage is also in the data, so the same
+    * count prices either frame (a frame without a change set carries no
+    * `delete` rows). The wait is bounded and fails naming the plan.
+    * Counts come from the tags, never from a before/after file diff,
+    * which would also count the lazy deletes a rewrite materializes as
+    * this commit's deletes. A commit whose priced effect is zero, or
+    * whose pricing fails to arrive, deletes this attempt's output and
+    * publishes nothing. `rowsTotal` stays footer truth: replaced files
+    * leave with their physical counts (lazy-delete marks included) and
+    * new files bring theirs. Only inserted or updated rows can move an
+    * identity high-water mark, so a commit of deletes alone skips that
+    * check (and the scan it costs on files without identity stats).
+    */
+  private def rewrite(snap: Manifest, action: String, replaced: Seq[LogFile],
+      carried: Seq[LogFile], out: DataFrame, recordChanges: Boolean = true,
+      schema: StructType = null, mapping: Map[String, String] = null): Manifest = {
+    val mapping2 = Option(mapping).getOrElse(snap.columnMapping)
+    val ct = col("_change_type")
+    val kept = out.filter(ct.isNull || ct.isin("insert", "update_postimage"))
+    def n(tag: String) = sum(when(ct === tag, 1L).otherwise(0L))
+    val (priced, counts) = graft.Observed(
+      if (recordChanges) out.filter(ct.isNotNull) else kept,
+      n("insert"), n("update_postimage"), n("delete"))
+    val ((newFiles, _, dataSub), changesSub) = writeDataAndChanges(
+      () => writeData((if (recordChanges) kept else priced).drop("_change_type"),
+        snap.partitionCols, mapping2),
+      Option.when(recordChanges)(() =>
+        writeChanges(priced, snap.version + 1, mapping2)))
+    def dropAttempt(): Unit = {
+      deleteRecursively(GPath(dir, dataSub))
+      changesSub.foreach(cs => deleteRecursively(GPath(dir,
+        StagedChangesDirName, GPath(cs).getFileName.toString)))
+    }
+    val row = try counts.await(s"$action at $dir")
+      catch { case e: Throwable => dropAttempt(); throw e }
+    val Seq(ins, upd, del) = (0 until 3).map(zeroIfNull(row, _))
+    if (ins + upd + del == 0) { dropAttempt(); throw NoOpCommit }
+    mkManifest(snap, action, carried ++ newFiles,
+      rowsInserted = ins, rowsUpdated = upd, rowsDeleted = del,
+      rowsTotal = snap.rowsTotal - replaced.map(_.rows).sum +
+        newFiles.map(_.rows).sum,
+      changesDir = changesSub, schema = schema, columnMapping = mapping,
+      properties = (if (ins + upd > 0)
+        identitySyncProps(snap, mapping2, newFiles).orNull else null))
   }
 
   /** Resolve a wall-clock instant to a version — Delta's
@@ -2794,21 +2708,24 @@ final class CommitLogTable private (val spark: SparkSession, val dir: String) {
     * sides run to COMPLETION (Try-lifted) before either result is
     * inspected; if one failed, the survivor's staged output is
     * best-effort deleted before rethrowing, so a failed commit leaves no
-    * orphan data/ or staged-changes/ directories behind.
+    * orphan data/ or staged-changes/ directories behind. Without a
+    * change set the data write runs alone.
     */
   private def writeDataAndChanges(data: () => (Seq[LogFile], Long, String),
-      changes: () => String): ((Seq[LogFile], Long, String), String) = {
+      changes: Option[() => String])
+      : ((Seq[LogFile], Long, String), Option[String]) = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     import scala.util.{Failure, Success, Try}
+    if (changes.isEmpty) return (data(), None)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     val fd = Future(Try(data()))
-    val fc = Future(Try(changes()))
+    val fc = Future(Try(changes.get()))
     val (dRes, cRes) =
       try Await.result(fd.zip(fc), Duration.Inf) finally pool.shutdown()
     (dRes, cRes) match {
-      case (Success(d), Success(c)) => (d, c)
+      case (Success(d), Success(c)) => (d, Some(c))
       case _ =>
         dRes.foreach { case (_, _, sub) =>
           try deleteRecursively(GPath(dir, sub))

@@ -253,6 +253,30 @@ class CommitLogSpec extends AnyFunSuite {
     assert(!GFiles.exists(orphan))
   }
 
+  test("a DML whose pricing metrics go missing fails naming them and leaves no data or staged dir") {
+    val dir = tmpDir()
+    val lost = org.apache.spark.sql.graftbridge.LostMetrics.session(spark)
+    val t = CommitLogTable.create(lost, dir, mk(Nil).schema)
+    t.append(mk(Seq((1L, "a", 1.0), (2L, "b", 2.0))))
+    val v = t.latestVersion
+    def entries(sub: String) = {
+      val p = GPath(dir, sub)
+      if (GFiles.exists(p)) GFiles.list(p).map(_.fileName).toSet else Set.empty[String]
+    }
+    val data = entries("data")
+    def check(what: String)(dml: => Unit): Unit = {
+      val e = intercept[IllegalStateException](dml)
+      assert(e.getMessage.contains("are missing"), s"$what: ${e.getMessage}")
+      assert(t.latestVersion == v, s"$what published a version")
+      assert(entries("data") == data, s"$what left a data dir")
+      assert(entries("_graft_log/staged_changes").isEmpty, s"$what left a staged dir")
+    }
+    check("update")(t.update($"k" === 1L, Map("v" -> lit(10.0))))
+    check("merge without a change feed")(
+      t.merge(mk(Seq((2L, "b", 20.0))), Seq("k"), Seq($"v"), recordChanges = false))
+    assert(rows(t.read()) == Set((1L, "a", 1.0), (2L, "b", 2.0)))
+  }
+
   test("clustered compact (ZORDER-style): content identical, every file sorted, file ranges disjoint") {
     val dir = tmpDir()
     val t = CommitLogTable.create(spark, dir, mk(Nil).schema)
@@ -958,6 +982,9 @@ class CommitLogSpec extends AnyFunSuite {
     // later merge, an update over half-materialized marks, compact mid-
     // sequence — all checked against a trivial Map model. Seeded: the
     // sequences are deterministic across runs.
+    // After every DML step the commit's `history` counts and its change
+    // images (`readChanges(v, v)`, as a multiset) are checked against the
+    // model too; a zero-effect DML must publish no version.
     val rnd = new scala.util.Random(42)
     for (trial <- 1 to 2) {
       val dir = tmpDir()
@@ -969,21 +996,54 @@ class CommitLogSpec extends AnyFunSuite {
           nextKey += 1
           (nextKey, s"c${rnd.nextInt(4)}", math.rint(rnd.nextDouble() * 200) / 2)
         }
-      for (step <- 1 to 12) {
-        rnd.nextInt(8) match {
+      def image(k: Long, tag: String): (Long, String, Double, String) = (k, model(k)._1, model(k)._2, tag)
+      def dml(step: Int, what: String, counts: (Long, Long, Long),
+          images: Seq[(Long, String, Double, String)])(commit: => Long): Unit = {
+        val before = t.latestVersion
+        val v = commit
+        val at = s"trial $trial step $step ($what)"
+        if (counts == ((0L, 0L, 0L))) assert(v == before && t.latestVersion == before,
+          s"$at: a zero-effect commit published v$v")
+        else {
+          assert(v == before + 1, s"$at: published v$v after v$before")
+          val h = t.history.orderBy(desc("version")).head()
+          assert((h.getAs[Long]("rows_inserted"), h.getAs[Long]("rows_updated"),
+            h.getAs[Long]("rows_deleted")) == counts, s"$at: history counts")
+          val got = t.readChanges(v, v).select("k", "cat", "v", "_change_type")
+          val exp = images.toDF("k", "cat", "v", "_change_type")
+          assert(got.exceptAll(exp).isEmpty && exp.exceptAll(got).isEmpty,
+            s"$at: change images\n got=${got.collect().toSeq}\n exp=$images")
+        }
+      }
+      // every step kind runs at least once per trial, in a random order
+      for ((kind, step) <- rnd.shuffle(Seq.tabulate(16)(_ % 10)).zip(1 to 16)) {
+        kind match {
           case 0 | 1 => // append fresh keys
             val rows = freshRows(1 + rnd.nextInt(4))
             t.append(mk(rows).coalesce(1))
             model ++= rows.map(r => r._1 -> (r._2, r._3))
-          case 2 => // merge: mix of updated existing keys and inserts
+          case c @ (2 | 9) => // merge: mix of updated existing keys and inserts
             val upd = rnd.shuffle(model.keys.toSeq).take(rnd.nextInt(3))
               .map(k => (k, s"u${rnd.nextInt(4)}", math.rint(rnd.nextDouble() * 200) / 2))
             val rows = upd ++ freshRows(1 + rnd.nextInt(2))
-            t.merge(mk(rows).coalesce(1), Seq("k"), Seq($"v"))
+            // case 9 is the CDF-off merge: same counts, no change images
+            val cdf = c == 2
+            val images = if (!cdf) Nil else rows.flatMap { case r @ (k, cat, v) =>
+              if (model.contains(k)) Seq(image(k, "update_preimage"),
+                (k, cat, v, "update_postimage"))
+              else Seq((k, cat, v, "insert"))
+            }
+            val counts = (rows.count(r => !model.contains(r._1)).toLong,
+              upd.size.toLong, 0L)
+            dml(step, if (cdf) "merge" else "merge, no CDF", counts, images)(
+              t.merge(mk(rows).coalesce(1), Seq("k"), Seq($"v"),
+                recordChanges = cdf))
             model ++= rows.map(r => r._1 -> (r._2, r._3))
           case 3 => // eager copy-on-write delete
             val x = rnd.nextInt(200) / 2.0
-            t.delete($"v" < x)
+            val gone = model.filter(_._2._2 < x).keys.toSeq
+            dml(step, "delete", (0L, 0L, gone.size.toLong),
+              gone.map(image(_, "delete")))(t.delete($"v" < x))
             model = model.filter { case (_, (_, v)) => !(v < x) }
           case 4 => // merge-on-read lazy delete (same logical outcome)
             val x = rnd.nextInt(200) / 2.0
@@ -991,7 +1051,11 @@ class CommitLogSpec extends AnyFunSuite {
             model = model.filter { case (_, (_, v)) => !(v < x) }
           case 5 => // update
             val x = rnd.nextInt(200) / 2.0
-            t.update($"v" >= x, Map("v" -> (col("v") + 0.5)))
+            val hit = model.filter(_._2._2 >= x).keys.toSeq
+            dml(step, "update", (0L, hit.size.toLong, 0L), hit.flatMap { k =>
+              Seq(image(k, "update_preimage"),
+                (k, model(k)._1, model(k)._2 + 0.5, "update_postimage")) })(
+              t.update($"v" >= x, Map("v" -> (col("v") + 0.5))))
             model = model.map { case (k, (c, v)) =>
               k -> (c, if (v >= x) v + 0.5 else v) }
           case 6 => // compact: materializes marks, never changes content
@@ -999,8 +1063,35 @@ class CommitLogSpec extends AnyFunSuite {
           case 7 => // idle churn: empty merge + provably-empty lazy delete
             t.merge(mk(Nil), Seq("k"), Seq($"v"))
             if (model.nonEmpty) t.deleteLazy("v < -1000000")
+          case 8 => // mergeInto: matched delete / matched update / insert
+            // a source row with cat "del" deletes its match and never
+            // inserts; any other updates its match or inserts
+            val src = rnd.shuffle(model.keys.toSeq).take(rnd.nextInt(4))
+              .map(k => (k, if (rnd.nextBoolean()) "del" else s"m${rnd.nextInt(4)}",
+                math.rint(rnd.nextDouble() * 200) / 2)) ++
+              freshRows(rnd.nextInt(3)).map(r =>
+                if (rnd.nextInt(3) == 0) r.copy(_2 = "del") else r)
+            val (hits, misses) = src.partition(r => model.contains(r._1))
+            val (dels, upds) = hits.partition(_._2 == "del")
+            val ins = misses.filterNot(_._2 == "del")
+            val images = dels.map(r => image(r._1, "delete")) ++
+              upds.flatMap { case (k, cat, v) => Seq(image(k, "update_preimage"),
+                (k, cat, v, "update_postimage")) } ++
+              ins.map { case (k, cat, v) => (k, cat, v, "insert") }
+            val s = col("s.cat") === "del"
+            dml(step, "mergeInto", (ins.size.toLong, upds.size.toLong,
+                dels.size.toLong), images)(
+              t.mergeInto(mk(src).coalesce(1), col("t.k") === col("s.k"),
+                Seq(CommitLogTable.MatchedDelete(Some(s)),
+                  CommitLogTable.MatchedUpdate(None,
+                    Map("cat" -> col("s.cat"), "v" -> col("s.v")))),
+                Seq(CommitLogTable.NotMatchedInsert(Some(!s),
+                  Map("k" -> col("s.k"), "cat" -> col("s.cat"), "v" -> col("s.v")))),
+                Nil))
+            model = model -- dels.map(_._1) ++
+              (upds ++ ins).map(r => r._1 -> (r._2, r._3))
         }
-        if (step % 4 == 0 || step == 12) {
+        if (step % 4 == 0) {
           val got = t.read().collect()
             .map(r => r.getLong(0) -> (r.getString(1), r.getDouble(2))).toMap
           assert(got == model,

@@ -286,4 +286,31 @@ class PlanSpec extends AnyFunSuite {
     assert(!plan.contains("rangepartitioning"), plan.take(3000))
     CacheBin.drain()
   }
+
+  test("observed metrics AQE prunes from a plan fail naming the plan, never block") {
+    import org.apache.spark.sql.functions.{count, lit, rand}
+    // the round-19 hang: a CollectMetrics below an operator that AQE's
+    // empty-relation propagation replaces once a stage runs empty. The
+    // hang had it in a union branch; on Spark 4.1 an empty union branch
+    // keeps the node, and an inner join with a runtime-empty side drops
+    // it, node and all
+    val runsEmpty = spark.range(100).toDF("j")
+      .filter($"j" > rand() * 1000 + 1000).repartition(2)
+    val (side, metrics) = Observed(spark.range(10).toDF("id"), count(lit(1)))
+    val out = java.nio.file.Files.createTempDirectory("graft-observed").toString
+    side.join(runsEmpty, $"id" === $"j").write.mode("overwrite").parquet(out)
+    // far inside Observed.WaitBound: the wait ends on the empty metric
+    // row, it never runs out the bound
+    val t0 = System.nanoTime()
+    val e = intercept[IllegalStateException](metrics.await(s"pruned write at $out"))
+    assert(System.nanoTime() - t0 < 30L * 1000000000L)
+    assert(e.getMessage.contains(s"pruned write at $out"), e.getMessage)
+    assert(e.getMessage.contains("are missing"), e.getMessage)
+    assert(e.getMessage.contains("CollectMetrics"), e.getMessage)
+    // the same metrics at the root of the written frame always arrive
+    val (root, rootMetrics) = Observed(
+      spark.range(10).toDF("id").join(runsEmpty, $"id" === $"j"), count(lit(1)))
+    root.write.mode("overwrite").parquet(out)
+    assert(rootMetrics.await("root write").getLong(0) == 0L)
+  }
 }
