@@ -362,9 +362,31 @@ object FileStreamIngest {
     *     of its key; `first_day` comes from the batch, not from what
     *     silver changed, so a replay rewrites the same gold days.
     *
+    * Two branches commit concurrently ([[graft.tables.ForkJoin]]): the
+    * quarantine upsert, and the silver upsert followed by the gold
+    * upsert. They write disjoint tables, and quarantine reads only the
+    * batch, so neither branch reads what the other writes; gold reads
+    * silver and runs strictly after the silver commit. A batch then
+    * costs about the longer branch, not the sum of all three commits. A
+    * sink added here states which commit it depends on; a sink that
+    * depends only on the batch joins the quarantine branch. Both
+    * branches run on threads this call starts, which inherit its
+    * `SparkContext` local properties (a streaming query's job group,
+    * so the query's `stop()` cancels both branches' jobs).
+    *
+    * Failure: both branches always run to completion; then the first
+    * failure (quarantine before silver/gold) is rethrown with the
+    * other's attached as suppressed. The persisted frames are released
+    * only after both finish, so no commit reads an unpersisted frame.
+    * A branch that failed leaves its table at its previous version
+    * while the other branch's commits stand — the state a crash between
+    * two sequential commits leaves — and a replay converges it.
+    *
     * Exactly-once: the streaming checkpoint replays an interrupted batch,
     * and every sink here is a KEYED upsert — quarantine included — so a
-    * replay converges to identical tables instead of double-appending.
+    * replay converges to identical tables instead of double-appending,
+    * whichever of its commits had landed. The order of commits across
+    * tables is therefore not part of the contract.
     * The quarantine key is a non-null surrogate (below), so convergence
     * holds even for malformed NULL-id rows; silver/gold key on
     * `event_id`, so rows that PASS the DQ gate must carry a non-null
@@ -378,6 +400,7 @@ object FileStreamIngest {
       rules: Seq[graft.operators.Expectations.Expectation],
       ops: TableOps = TableOps.commitLog): Unit = {
     import graft.operators.{Expectations, GoldFeatures, Normalize}
+    import graft.tables.ForkJoin
     val spark = batch.sparkSession
     val cached = batch.persist()
     // persisted: each upsert helper fires several actions (emptiness
@@ -386,7 +409,7 @@ object FileStreamIngest {
     // silver history would re-execute per action
     val normalized = Normalize.events(Expectations.enforce(cached, rules)).persist()
     var gold: DataFrame = null
-    try {
+    val quarantine = () => {
       // through the seam like silver/gold: the quarantine table gets the
       // same atomic commits and CDF. Keyed on a NON-NULL surrogate, not
       // event_id directly: quarantine is exactly where malformed rows
@@ -407,33 +430,36 @@ object FileStreamIngest {
           sha2(to_json(struct(quarRaw.columns.map(col).toIndexedSeq: _*)), 256)))
       ops.upsert(quar, s"$outRoot/quarantine", Seq("quarantine_key"),
         Seq(struct(quarRaw.columns.map(col).toIndexedSeq: _*)))
-      if (!normalized.isEmpty) {
-        val silverDir = s"$outRoot/silver"
-        // day rides the merge key (it is a function of ts, so the pair is
-        // as unique as event_id alone) — the partition-stability contract
-        // the pruned merge wants. The full row breaks `ts` ties, as in
-        // quarantine: two differing versions of one bar in one batch
-        // then have one winner, whatever the shuffle order
-        ops.upsertPartitions(normalized, silverDir,
-          keys = Seq("event_id", "day"),
-          order = Seq(col("ts").desc,
-            struct(normalized.columns.map(col).toIndexedSeq: _*)),
-          dayCol = "day")
-        val firstDay = normalized.groupBy("user_id").agg(min("day").as("first_day"))
-        // the batch symbols' history, each row tagged with its symbol's
-        // first batch day; the select keeps silver's column order (a USING
-        // join moves the key first), so gold's schema does not move
-        val silver = ops.readTable(spark, silverDir)
-        val history = silver.join(broadcast(firstDay), Seq("user_id"))
-          .select((silver.columns :+ "first_day").map(col).toIndexedSeq: _*)
-        gold = GoldFeatures.features(history, keyCols = Seq("user_id"),
-            order = Seq(col("ts"), col("event_id")), valueCol = "value")
-          .filter(col("day") >= col("first_day")).drop("first_day").persist()
-        ops.upsertPartitions(gold, s"$outRoot/gold",
-          keys = Seq("event_id", "day"), order = Seq(col("ts").desc),
-          dayCol = "day")
-      }
-    } finally {
+    }
+    val silverThenGold = () => if (!normalized.isEmpty) {
+      val silverDir = s"$outRoot/silver"
+      // day rides the merge key (it is a function of ts, so the pair is
+      // as unique as event_id alone) — the partition-stability contract
+      // the pruned merge wants. The full row breaks `ts` ties, as in
+      // quarantine: two differing versions of one bar in one batch
+      // then have one winner, whatever the shuffle order
+      ops.upsertPartitions(normalized, silverDir,
+        keys = Seq("event_id", "day"),
+        order = Seq(col("ts").desc,
+          struct(normalized.columns.map(col).toIndexedSeq: _*)),
+        dayCol = "day")
+      val firstDay = normalized.groupBy("user_id").agg(min("day").as("first_day"))
+      // the batch symbols' history, each row tagged with its symbol's
+      // first batch day; the select keeps silver's column order (a USING
+      // join moves the key first), so gold's schema does not move
+      val silver = ops.readTable(spark, silverDir)
+      val history = silver.join(broadcast(firstDay), Seq("user_id"))
+        .select((silver.columns :+ "first_day").map(col).toIndexedSeq: _*)
+      gold = GoldFeatures.features(history, keyCols = Seq("user_id"),
+          order = Seq(col("ts"), col("event_id")), valueCol = "value")
+        .filter(col("day") >= col("first_day")).drop("first_day").persist()
+      ops.upsertPartitions(gold, s"$outRoot/gold",
+        keys = Seq("event_id", "day"), order = Seq(col("ts").desc),
+        dayCol = "day")
+    }
+    try ForkJoin.firstFailure(ForkJoin.all(Seq(quarantine, silverThenGold)))
+      .foreach(e => throw e)
+    finally {
       cached.unpersist()
       normalized.unpersist()
       if (gold != null) gold.unpersist()

@@ -2714,46 +2714,41 @@ final class CommitLogTable private (val spark: SparkSession, val dir: String) {
   private def writeDataAndChanges(data: () => (Seq[LogFile], Long, String),
       changes: Option[() => String])
       : ((Seq[LogFile], Long, String), Option[String]) = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    import scala.util.{Failure, Success, Try}
     if (changes.isEmpty) return (data(), None)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val fd = Future(Try(data()))
-    val fc = Future(Try(changes.get()))
-    val (dRes, cRes) =
-      try Await.result(fd.zip(fc), Duration.Inf) finally pool.shutdown()
-    (dRes, cRes) match {
-      case (Success(d), Success(c)) => (d, Some(c))
-      case _ =>
-        dRes.foreach { case (_, _, sub) =>
-          try deleteRecursively(GPath(dir, sub))
-          catch { case _: Exception => () }
-        }
-        cRes.foreach { finalSub =>
-          try deleteRecursively(GPath(dir, StagedChangesDirName,
-            GPath(finalSub).getFileName.toString))
-          catch { case _: Exception => () }
-        }
-        throw Seq(dRes, cRes).collectFirst { case Failure(e) => e }.get
+    val (dRes, cRes) = ForkJoin.pair(data, changes.get)
+    ForkJoin.firstFailure(Seq(dRes, cRes)).foreach { e =>
+      dRes.foreach { case (_, _, sub) =>
+        try deleteRecursively(GPath(dir, sub))
+        catch { case _: Exception => () }
+      }
+      cRes.foreach { finalSub =>
+        try deleteRecursively(GPath(dir, StagedChangesDirName,
+          GPath(finalSub).getFileName.toString))
+        catch { case _: Exception => () }
+      }
+      throw e
     }
+    (dRes.get, cRes.toOption)
   }
 
-  /** Run `f` over `items` on a bounded thread pool, preserving order.
-    * Used for driver-side metadata I/O and for launching independent
+  /** Run `f` over `items` on at most 16 fresh threads ([[ForkJoin]]),
+    * each taking the next unclaimed item, preserving order. Used for
+    * driver-side metadata I/O and for launching independent
     * per-partition Spark jobs concurrently.
     */
   private def inParallel[A, B](items: Seq[A])(f: A => B): Seq[B] =
     if (items.lengthCompare(2) < 0) items.map(f)
     else {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(16, items.size))
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try Await.result(Future.sequence(items.map(a => Future(f(a)))), Duration.Inf)
-      finally pool.shutdown()
+      val in = items.toIndexedSeq
+      val out = new Array[Any](in.size)
+      val next = new java.util.concurrent.atomic.AtomicInteger
+      val worker = () => {
+        var i = next.getAndIncrement()
+        while (i < in.size) { out(i) = f(in(i)); i = next.getAndIncrement() }
+      }
+      ForkJoin.firstFailure(ForkJoin.all(Seq.fill(math.min(16, in.size))(worker)))
+        .foreach(e => throw e)
+      out.toSeq.asInstanceOf[Seq[B]]
     }
 
   /** Footer-only row count + per-column (min, max) — never a data scan.

@@ -1,8 +1,13 @@
 package graft
 
 import java.nio.file.Files
+import java.util.UUID
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -281,5 +286,132 @@ class MedallionPipelineSpec extends AnyFunSuite {
     assert(read(s"$outA/silver").filter($"event_id" === 1003L).count() == 1)
     assert(sortedRows(read(s"$outA/silver")) == sortedRows(read(s"$outB/silver")))
     assert(sortedRows(read(s"$outA/gold")) == sortedRows(read(s"$outB/gold")))
+  }
+
+  /** `TableOps.commitLog` with a hook before each commit: `quarantine`
+    * before the quarantine upsert, `silver` before the silver upsert.
+    */
+  private class Hooked(quarantine: () => Unit = () => (),
+      silver: () => Unit = () => ()) extends TableOps {
+    private val d = TableOps.commitLog
+    override def merge(target: DataFrame, updates: DataFrame, keys: Seq[String],
+        order: Seq[Column]): DataFrame = d.merge(target, updates, keys, order)
+    override def upsertPartitions(batch: DataFrame, targetDir: String,
+        keys: Seq[String], order: Seq[Column], dayCol: String): Unit = {
+      if (targetDir.endsWith("/silver")) silver()
+      d.upsertPartitions(batch, targetDir, keys, order, dayCol)
+    }
+    override def upsert(batch: DataFrame, targetDir: String, keys: Seq[String],
+        order: Seq[Column]): Unit = {
+      quarantine()
+      d.upsert(batch, targetDir, keys, order)
+    }
+    override def compact(spark: SparkSession, dir: String, partitionCol: String,
+        targetFileBytes: Long, values: Seq[String]): Map[String, (Int, Int)] =
+      d.compact(spark, dir, partitionCol, targetFileBytes, values)
+    override def vacuum(dir: String): (Int, Int) = d.vacuum(dir)
+    override def readTable(spark: SparkSession, dir: String): DataFrame =
+      d.readTable(spark, dir)
+  }
+
+  /** All three tables equal the batch pipeline's answers over `all`. */
+  private def assertBatchParity(out: String, all: DataFrame): Unit = {
+    assertSameSet(read(s"$out/silver"), Normalize.events(all))
+    assertSameSet(read(s"$out/gold"), batchGold(all))
+    assertSameSet(read(s"$out/quarantine"),
+      Expectations.quarantine(all, rules).select("event_id", "dq_reason"))
+  }
+
+  private def version(out: String, table: String): Long =
+    graft.tables.CommitLogTable.open(spark, s"$out/$table").latestVersion
+
+  /** Three symbols' bars over twelve days plus two bars failing the DQ
+    * gate, one with an even and one with an odd `event_id`.
+    */
+  private def smallBatch(): DataFrame =
+    bars(for (s <- 1L to 3L; d <- 0 until 12) yield (s, d, 100.0 + s * 10 + d))
+      .unionByName(bars(Seq((4L, 2, -1.0), (4L, 3, -1.0))))
+
+  test("the quarantine commit runs concurrently with the silver commit") {
+    val out = tmp("fork")
+    val all = corpus()
+    // the quarantine commit can start only once the silver commit has:
+    // sequential commits fail here after the bound instead of hanging
+    val silverStarted = new CountDownLatch(1)
+    val ops = new Hooked(
+      quarantine = () =>
+        if (!silverStarted.await(60, TimeUnit.SECONDS))
+          fail("quarantine commit did not overlap silver"),
+      silver = () => silverStarted.countDown())
+    FileStreamIngest.medallionBatch(all, out, rules, ops)
+    assertBatchParity(out, all)
+  }
+
+  test("a failing branch: the other still commits, the frames are released, a replay converges") {
+    val all = smallBatch()
+    val wave1 = all.filter($"event_id" % 2 === 0)
+    val wave2 = all.filter($"event_id" % 2 === 1)
+    val sc = spark.sparkContext
+    for (failing <- Seq("quarantine", "silver")) {
+      val out = tmp(s"fail-$failing")
+      FileStreamIngest.medallionBatch(wave1, out, rules)
+      val before = Seq("quarantine", "silver", "gold").map(t => t -> version(out, t)).toMap
+      val boom = new IllegalStateException(s"$failing commit failed")
+      val ops =
+        if (failing == "quarantine") new Hooked(quarantine = () => throw boom)
+        else new Hooked(silver = () => throw boom)
+      val cachedBefore = sc.getPersistentRDDs.size
+      val e = intercept[IllegalStateException](
+        FileStreamIngest.medallionBatch(wave2, out, rules, ops))
+      assert(e eq boom)
+      assert(sc.getPersistentRDDs.size == cachedBefore,
+        "a frame stayed persisted after the batch failed")
+      if (failing == "quarantine") {
+        // thrown only after the other branch had committed silver and gold
+        assert(version(out, "quarantine") == before("quarantine"))
+        assert(version(out, "silver") == before("silver") + 1)
+        assert(version(out, "gold") == before("gold") + 1)
+      } else {
+        assert(version(out, "quarantine") == before("quarantine") + 1)
+        assert(version(out, "silver") == before("silver"))
+        assert(version(out, "gold") == before("gold"))
+      }
+      // the checkpoint replays the whole batch, as after a crash between
+      // two commits
+      FileStreamIngest.medallionBatch(wave2, out, rules)
+      assertBatchParity(out, all)
+    }
+  }
+
+  test("the forked commits run under the caller's job group") {
+    val out = tmp("group")
+    val sc = spark.sparkContext
+    val groups = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    val seenBy = new ConcurrentLinkedQueue[String]()
+    def group(table: String) = () => {
+      seenBy.add(s"$table:${sc.getLocalProperty("spark.jobGroup.id")}"); ()
+    }
+    val ops = new Hooked(quarantine = group("quarantine"), silver = group("silver"))
+    val end = s"end-${UUID.randomUUID()}"
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("medallion-test", "medallion")
+      try FileStreamIngest.medallionBatch(smallBatch(), out, rules, ops)
+      finally sc.clearJobGroup()
+      sc.setJobGroup(end, "end")
+      try spark.range(1).collect() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!groups.contains(end) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(groups.contains(end), "the marker job never reached the listener")
+    } finally sc.removeSparkListener(listener)
+    assert(seenBy.asScala.toSet == Set("quarantine:medallion-test", "silver:medallion-test"))
+    val during = groups.asScala.toSeq.takeWhile(_ != end)
+    assert(during.nonEmpty && during.forall(_ == "medallion-test"), during)
+    assert(version(out, "quarantine") == 1)
   }
 }
